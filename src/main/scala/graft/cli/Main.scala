@@ -380,8 +380,8 @@ object Main {
     // dedup a parquet drop of (doc_id, text) documents against a
     // persisted DedupState, print the verdict accounting, and append the
     // admitted evidence as a new delta. The fingerprint defaults to the
-    // drop path + its size/mtime, so re-running a crashed invocation is
-    // a no-op (the manifest ledger recognizes it).
+    // drop path + its file fingerprint, so re-running a crashed
+    // invocation is a no-op (the manifest ledger recognizes it).
     case Seq("admit", stateDir, dropDir) =>
       val s = spark()
       val fp = dropDir + "|" + graft.util.ArtifactCache.fingerprintOf(
@@ -475,7 +475,7 @@ object Main {
     // pack_best_fit_tokens constants (L=128 buckets=32 eos=34 pad=35);
     // an existing state's manifest pins its own geometry and a mismatch
     // fails loudly. The fingerprint defaults to the drop path +
-    // size/mtime, so a crashed invocation re-runs as a no-op.
+    // file fingerprint, so a crashed invocation re-runs as a no-op.
     // optional trailing arg = closeBelow (the round-16 closed-bins
     // rule, pinned into the state's geometry at CREATION): an existing
     // state's manifest wins — its pinned geometry (whole Params, not
@@ -539,17 +539,6 @@ object Main {
       val n = graft.operators.DedupState.gc(stateDir)
       println(s"compacted to ${h.deltas.size} delta(s) " +
         s"(${h.nDocs} docs, manifest v${h.version}); gc removed $n dir(s)")
-
-    // materialize legacy deltas' pre-banded leaves IN PLACE (no delta
-    // fold, no manifest change, verdicts bit-identical) — the cheap
-    // upgrade for many-delta pre-r15 states whose derive-on-read pays
-    // one Window per legacy delta per verdict
-    case Seq("upgrade-state", stateDir) =>
-      val s = spark()
-      val n = graft.operators.DedupState.upgrade(s, stateDir)
-      val h = graft.operators.DedupState.load(stateDir)
-      println(s"materialized $n leaf(s) across ${h.deltas.size} delta(s) " +
-        s"(${h.nDocs} docs, manifest v${h.version})")
 
     // the state's typed health verdict: delta accumulation (compaction
     // cadence) and exact-tier Bloom saturation (capacity)
@@ -678,7 +667,7 @@ object Main {
           "ingest-jsonl <jsonldir> <parquetdir>|" +
           "import-tokenizer <merges.txt> <vocab.json> <modeldir>|" +
           "admit <statedir> <dropparquet>|compact-state <statedir>|" +
-          "upgrade-state <statedir>|state-health <statedir>|" +
+          "state-health <statedir>|" +
           "admit-media <statedir> <hashparquet>|" +
           "media-state-health <statedir>|pack-state-health <statedir>|" +
           "pack <statedir> <idsparquet> [closeBelow]|" +

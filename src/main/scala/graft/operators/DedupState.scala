@@ -61,14 +61,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *                          the admission
   * }}}
   *
-  * Pre-round-15 deltas lack the `bands`/`ebands`/`spans`/`card` leaves:
-  * band rows are DERIVED on read for such legacy deltas (same per-delta
-  * cap semantics — one window per legacy delta, paid only until a
-  * [[compact]] materializes them), the audit card reads empty, and span
-  * evidence is structurally absent (the text needed to derive it was
-  * never persisted — a legacy delta's documents are invisible to
-  * [[spanVerdicts]]' state tier, documented here rather than silently
-  * approximated).
+  * Every delta [[admit]] or [[compact]] writes carries all seven leaves;
+  * a manifest-referenced delta missing one fails the read, naming the
+  * missing `<delta>/<leaf>` path.
   *
   * Crash safety is the [[VersionedArtifact]] discipline: a delta is staged
   * under `staging-<uuid>`, renamed whole, and becomes LIVE only when the
@@ -321,7 +316,7 @@ object DedupState {
     * (no semantic evidence). Parquet projection means callers touching
     * one column pay for one. */
   def rows(s: SparkSession, h: Handle): DataFrame =
-    readLeaf(s, h, h.deltas, "rows", RowsSchema)
+    readLeaf(s, h, "rows", RowsSchema)
 
   /** All admitted content hashes (one 32-hex-char column). */
   def hashes(s: SparkSession, h: Handle): DataFrame =
@@ -334,64 +329,42 @@ object DedupState {
 
   /** The state's PRE-BANDED lexical evidence `(doc_id, mins, band,
     * bkey)` — per-delta capped band rows, read from each delta's
-    * `bands/` leaf (derived live, same per-delta semantics, for legacy
-    * deltas that predate the leaf). This is what admission joins
-    * against: no window, no shuffle of state rows. */
-  def bands(s: SparkSession, h: Handle): DataFrame = {
-    val (have, legacy) = h.deltas.partition(leafExists(h, _, "bands"))
-    legacy.foldLeft(readLeaf(s, h, have, "bands", BandsSchema))((acc, d) =>
-      acc.unionByName(MinHashLsh.cappedBandsOf(
-        readLeaf(s, h, Seq(d), "rows", RowsSchema)
-          .filter(col("mins").isNotNull).select("doc_id", "mins"))))
-  }
+    * `bands/` leaf. This is what admission joins against: no window, no
+    * shuffle of state rows. */
+  def bands(s: SparkSession, h: Handle): DataFrame =
+    readLeaf(s, h, "bands", BandsSchema)
 
   /** The semantic twin of [[bands]]: `(doc_id, v, nrm, b, bkey)` from
     * the per-delta `ebands/` leaves. */
-  def ebands(s: SparkSession, h: Handle): DataFrame = {
-    val (have, legacy) = h.deltas.partition(leafExists(h, _, "ebands"))
-    legacy.foldLeft(readLeaf(s, h, have, "ebands", EbandsSchema))((acc, d) =>
-      acc.unionByName(RhpLsh.cappedBandsOf(RhpLsh.withSig(
-        readLeaf(s, h, Seq(d), "rows", RowsSchema)
-          .filter(col("emb").isNotNull)
-          .select(col("doc_id"), col("emb").as("v"))))
-        .select("doc_id", "v", "nrm", "b", "bkey")))
-  }
+  def ebands(s: SparkSession, h: Handle): DataFrame =
+    readLeaf(s, h, "ebands", EbandsSchema)
 
   /** All admitted documents' span chunk hashes (distinct within each
     * delta; a chunk admitted twice across deltas appears twice — only
-    * membership matters to the span tier). Legacy deltas contribute
-    * nothing (see class doc). Dtype follows the handle's `spanKind`
-    * (md5 → string, xxh64 → bigint). */
+    * membership matters to the span tier). Dtype follows the handle's
+    * `spanKind` (md5 → string, xxh64 → bigint). */
   def spans(s: SparkSession, h: Handle): DataFrame =
-    readLeaf(s, h, h.deltas.filter(leafExists(h, _, "spans")),
-      "spans", spansSchema(h.spanKind))
+    readLeaf(s, h, "spans", spansSchema(h.spanKind))
 
   private def spansSchema(kind: String): String =
     if (kind == SpanKindXxh64) "chunk_hash bigint" else SpansSchema
 
   /** The admission AUDIT card across every delta: one row per document
     * ever offered to [[admit]] (admitted and rejected) with its verdict
-    * flags — the durable "why did/should this document go" record.
-    * Legacy deltas (no `card/` leaf) contribute nothing. */
+    * flags — the durable "why did/should this document go" record. */
   def card(s: SparkSession, h: Handle): DataFrame =
-    readLeaf(s, h, h.deltas.filter(leafExists(h, _, "card")),
-      "card", CardSchema)
+    readLeaf(s, h, "card", CardSchema)
 
-  private def leafExists(h: Handle, d: DeltaRef, leaf: String): Boolean =
-    java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(h.dir, d.name, leaf))
-
+  /** `leaf` of every live delta. A missing leaf fails with Spark's
+    * path-not-found error on `<delta>/<leaf>`. */
   private def readLeaf(
-      s: SparkSession, h: Handle, deltas: Seq[DeltaRef],
-      leaf: String, schema: String): DataFrame = {
-    val paths = deltas.map(d => s"${h.dir}/${d.name}/$leaf")
+      s: SparkSession, h: Handle, leaf: String, schema: String): DataFrame = {
+    val paths = h.deltas.map(d => s"${h.dir}/${d.name}/$leaf")
     if (paths.isEmpty)
       s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType.fromDDL(schema))
-    // explicit schema, not inference: a column added to the layout later
-    // (emb, round 14) reads as NULL from pre-existing deltas — the
-    // schema-evolution path that lets a long-lived state gain tiers
-    // without a rewrite
+    // explicit schema, not inference: an all-rejected (or empty) batch
+    // writes data-less parquet dirs, where inference fails
     else s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
       .parquet(paths: _*)
   }
@@ -400,8 +373,7 @@ object DedupState {
     * OR-folded; ≤ bits/64 rows, broadcastable. */
   private def foldedBloom(
       s: SparkSession, h: Handle, leaf: String): DataFrame =
-    readLeaf(s, h, h.deltas.filter(leafExists(h, _, leaf)), leaf,
-      "word bigint, mask bigint")
+    readLeaf(s, h, leaf, "word bigint, mask bigint")
       .groupBy("word").agg(expr("bit_or(mask)").as("mask"))
 
   /** The two Bloom positions of a span-tier key under the given layout
@@ -796,12 +768,11 @@ object DedupState {
     * the manifest's capacity); band rows, span hashes, and audit cards
     * concatenate VERBATIM — no re-cap, no re-derivation — so a verdict
     * against the compacted state is bit-identical to one against the
-    * uncompacted state (legacy deltas' derived band rows materialize
-    * here, upgrading old states to the pre-banded read path).
-    * Content-preserving by construction; old deltas stay on disk until
-    * [[gc]]. The fingerprint LEDGER survives — the compacted ref carries
-    * every ancestor fingerprint joined with [[DeltaManifest.FpSep]], so
-    * idempotent replay keeps recognizing every admitted batch. */
+    * uncompacted state. Content-preserving by construction; old deltas
+    * stay on disk until [[gc]]. The fingerprint LEDGER survives — the
+    * compacted ref carries every ancestor fingerprint joined with
+    * [[DeltaManifest.FpSep]], so idempotent replay keeps recognizing
+    * every admitted batch. */
   def compact(s: SparkSession, dir: String): Handle = synchronized {
     val h = load(dir)
     if (h.deltas.size <= 1) return h
@@ -838,49 +809,6 @@ object DedupState {
     * contract — never run concurrently with an in-flight [[admit]]. */
   def gc(dir: String): Int = synchronized {
     DeltaManifest.gc(dir, Magic, s"bits=$DefaultBloomBits")
-  }
-
-  /** Materialize the pre-banded leaves of LEGACY deltas in place,
-    * WITHOUT folding deltas (round 16 — the upgrade path for many-delta
-    * pre-r15 states, where [[bands]]/[[ebands]]' derive-on-read folds
-    * one Window + union per legacy delta on every verdict). Each
-    * missing `bands/`/`ebands/` leaf is derived from that delta's own
-    * rows — byte-identical to what derive-on-read serves, since both
-    * run the same per-delta capped banding — staged inside the delta
-    * dir and published by atomic rename, so a crash mid-upgrade leaves
-    * only an ignored `.…-upgrade-tmp` dir (reclaimed on the next run)
-    * and the read path keeps deriving until the leaf exists whole.
-    * Content-preserving by construction: no manifest change, no delta
-    * fold, every verdict bit-identical before/after. Span evidence
-    * cannot be back-derived (it needs the admitted batch's TEXT, which
-    * rows/ never persists) — legacy deltas keep contributing nothing to
-    * the span tier, exactly as documented. Returns the number of leaves
-    * materialized. Single-writer contract, like [[compact]]. */
-  def upgrade(s: SparkSession, dir: String): Int = synchronized {
-    val h = load(dir)
-    var n = 0
-    h.deltas.foreach { d =>
-      def materialize(leaf: String)(make: => DataFrame): Unit =
-        if (!leafExists(h, d, leaf)) {
-          val target = java.nio.file.Paths.get(h.dir, d.name, leaf)
-          val tmp = java.nio.file.Paths.get(
-            h.dir, d.name, s".$leaf-upgrade-tmp")
-          graft.storage.ParquetLogBackend.deleteRecursively(tmp)
-          make.write.parquet(tmp.toString)
-          java.nio.file.Files.move(tmp, target,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          n += 1
-        }
-      materialize("bands")(MinHashLsh.cappedBandsOf(
-        readLeaf(s, h, Seq(d), "rows", RowsSchema)
-          .filter(col("mins").isNotNull).select("doc_id", "mins")))
-      materialize("ebands")(RhpLsh.cappedBandsOf(RhpLsh.withSig(
-        readLeaf(s, h, Seq(d), "rows", RowsSchema)
-          .filter(col("emb").isNotNull)
-          .select(col("doc_id"), col("emb").as("v"))))
-        .select("doc_id", "v", "nrm", "b", "bkey"))
-    }
-    n
   }
 
   /** Typed state-health verdict (round 16) — the

@@ -165,29 +165,17 @@ object PackState {
     "bucket bigint, seq bigint, step bigint, doc_id bigint, " +
       "ids_doc array<int>"
   private val BinsSchema = "bucket bigint, seq bigint, rem bigint"
-  // `nbins` (total bins ever opened per bucket — the next bin's seq
-  // source once closed bins leave the snapshot) is round-16: legacy
-  // deltas lack the column and read back null (Spark fills missing
-  // parquet columns under an explicit schema), derived on read from the
-  // legacy snapshot's max seq — exact, because a closeBelow=0 snapshot
-  // holds EVERY bin ever opened
+  // `nbins` is total bins ever opened per bucket — the next bin's seq
+  // source once closed bins leave the snapshot
   private val CountersSchema = "bucket bigint, steps bigint, nbins bigint"
 
-  // leaves a legacy delta may legitimately lack (closed/ is round-16);
-  // every other leaf is REQUIRED — a manifest-referenced delta missing
-  // contrib/bins/counters is corruption, and reading it as empty would
-  // reseed an empty tree, reuse seqs, and silently merge unrelated docs
-  // into over-length rows, so the required path stays loud
-  private val OptionalLeaves = Set("closed")
-
+  // every leaf is REQUIRED — a manifest-referenced delta missing one is
+  // corruption, and reading it as empty would reseed an empty tree,
+  // reuse seqs, and silently merge unrelated docs into over-length rows
   private def readLeaf(
       s: SparkSession, dir: String, deltas: Seq[String],
       leaf: String, schema: String): DataFrame = {
-    val paths =
-      if (OptionalLeaves(leaf))
-        deltas.map(d => s"$dir/$d/$leaf").filter(p =>
-          java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
-      else deltas.map(d => s"$dir/$d/$leaf")
+    val paths = deltas.map(d => s"$dir/$d/$leaf")
     if (paths.isEmpty)
       s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType.fromDDL(schema))
@@ -241,17 +229,16 @@ object PackState {
     // seed rows: (bucket, kind, a, b) — kind 1 = ACTIVE open bin (a=seq,
     // b=rem) in creation order, kind 2 = the counters (a=nbins ever
     // opened, b=steps); the kernel's sort key (kind, a) replays bins
-    // before the counter. nbins falls back to the snapshot's max seq for
-    // legacy (pre-nbins) deltas, where the snapshot holds every bin.
-    val binsNow = bins(s, h)
-    val maxSeq = binsNow.groupBy("bucket").agg(max(col("seq")).as("mxseq"))
-    val seed = binsNow
+    // before the counter. A null nbins fails the pack: reseeding seq
+    // from 0 would reuse the seqs of bins already emitted.
+    val ctrLeaf = h.deltas.lastOption.fold("")(d => s"$dir/${d.name}/counters")
+    val seed = bins(s, h)
       .select(col("bucket"), lit(1).as("kind"),
         col("seq").as("a"), col("rem").as("b"))
       .unionByName(counters(s, h)
-        .join(maxSeq, Seq("bucket"), "left")
         .select(col("bucket"), lit(2).as("kind"),
-          coalesce(col("nbins"), col("mxseq"), lit(0L)).as("a"),
+          coalesce(col("nbins"),
+            raise_error(lit(s"null nbins in $ctrLeaf"))).as("a"),
           col("steps").as("b")))
       .as[(Long, Int, Long, Long)]
     val docs = ids.select("doc_id", "bucket", "n_eff")
@@ -369,8 +356,7 @@ object PackState {
   /** Fold every delta's contrib (and closed-bins audit) verbatim into
     * one delta carrying the LATEST bins/counters snapshot —
     * [[trainingRows]] and the next [[pack]] answer identically before
-    * and after. The ledger survives; legacy counters materialize their
-    * derived nbins so the compacted delta is fully upgraded. */
+    * and after. The ledger survives. */
   def compact(s: SparkSession, dir: String, p: Params): Handle =
     synchronized {
       val h = load(dir, p)
@@ -378,15 +364,9 @@ object PackState {
       val staging = DeltaManifest.stagingPath(dir)
       val st = staging.toString
       contrib(s, h).write.parquet(s"$st/contrib")
-      val binsNow = bins(s, h)
-      binsNow.write.parquet(s"$st/bins")
+      bins(s, h).write.parquet(s"$st/bins")
       binsClosed(s, h).write.parquet(s"$st/closed")
-      counters(s, h)
-        .join(binsNow.groupBy("bucket").agg(max(col("seq")).as("mxseq")),
-          Seq("bucket"), "left")
-        .select(col("bucket"), col("steps"),
-          coalesce(col("nbins"), col("mxseq"), lit(0L)).as("nbins"))
-        .write.parquet(s"$st/counters")
+      counters(s, h).write.parquet(s"$st/counters")
       val deltaName = DeltaManifest.promote(staging)
       val mergedLedger =
         h.deltas.map(_.ledger).mkString(DeltaManifest.FpSep.toString)

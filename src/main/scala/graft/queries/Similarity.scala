@@ -49,8 +49,8 @@ object Similarity {
   private def opqRotation(
       e: DataFrame, dir: String): Array[Double] = {
     val fp =
-      try Some(graft.sources.GraftLogCache
-        .corpusFingerprint(dir, "embeddings.parquet"))
+      try Some(graft.util.ArtifactCache.fingerprintOf(
+        java.nio.file.Paths.get(dir, "embeddings.parquet")))
       catch { case scala.util.control.NonFatal(_) => None }
     fp match {
       case Some(f) =>
@@ -125,7 +125,7 @@ object Similarity {
   }
 
   /** Build-and-save the persisted IVF index once per testdata dir, keyed
-    * by the embeddings parquet's size/mtime fingerprint (the GraftLogCache
+    * by the embeddings parquet's fingerprint (the ArtifactCache
     * discipline: staging dir + atomic rename, so concurrent builders race
     * benignly and a crashed build is never mistaken for an index). The
     * ann_ivf_persisted query then exercises LOAD + PROBE — the serving

@@ -1162,38 +1162,17 @@ object TextAnalysis {
     }
 
   private def ensureSearchIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val ck = corpusKey(dir).getOrElse(s"$dir|nofp")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(ck.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      // searchidx4: the round-10 meta layout (doc_min/doc_max for the
-      // appendDocs overlap guard) atop the round-9 batch-manifest layout
-      // (dl + positional postings, meta commit markers, no precomputed
-      // idf) — the bumped prefix orphans any cached prior-layout index
-      // instead of misreading it
-      val base = Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-searchidx4-$key")
-      if (Files.isDirectory(base.resolve("postings"))) return base.toString
-      val staging = Paths.get(
-        base.toString + ".build-" +
-          java.util.UUID.randomUUID().toString.take(8))
+    // searchidx4: the round-10 meta layout (doc_min/doc_max for the
+    // appendDocs overlap guard) atop the round-9 batch-manifest layout
+    // (dl + positional postings, meta commit markers, no precomputed
+    // idf) — the bumped prefix orphans any cached prior-layout index
+    // instead of misreading it
+    graft.util.ArtifactCache.ensure(
+      java.nio.file.Paths.get(dir, "documents.parquet"),
+      "graft-searchidx4", "postings") { staging =>
       graft.operators.SearchIndex.build(
         Tables(s, dir, "documents").select(col("doc_id"), col("text")))
-        .save(staging.toString, fingerprint = Some(ck))
-      try Files.move(staging, base, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case e @ (_: java.nio.file.FileAlreadyExistsException |
-            _: java.nio.file.DirectoryNotEmptyException |
-            _: java.nio.file.AccessDeniedException) =>
-          graft.storage.ParquetLogBackend.deleteRecursively(staging)
-          // "lost the race" is only true if the winner's copy exists —
-          // a genuine permission failure must surface, not masquerade as
-          // a cache hit pointing at a path that was never created
-          if (!Files.isDirectory(base.resolve("postings"))) throw e
-      }
-      base.toString
+        .save(staging, fingerprint = corpusKey(dir))
     }
 
   /** The add-1 smoothed bigram NLL model from per-(doc, bigram) counts —
@@ -1374,7 +1353,7 @@ object TextAnalysis {
     * process (the bench/verify shape) — the in-process stand-in for
     * "persist train_bpe's table" in a production pipeline. Keyed on the
     * corpus files' name+size+mtime fingerprint
-    * ([[graft.sources.GraftLogCache.corpusFingerprint]]), so an overwritten
+    * ([[graft.util.ArtifactCache.fingerprintOf]]), so an overwritten
     * documents.parquet — the specs' temp dirs — can never serve stale
     * merges; a corpus the local fingerprint can't see (remote fs) just
     * learns uncached. The catch covers ONLY the fingerprint I/O: a genuine
@@ -1394,8 +1373,8 @@ object TextAnalysis {
     * so the two paths can never key the same corpus differently. The
     * catch covers ONLY the fingerprint I/O. */
   private def corpusKey(dir: String): Option[String] =
-    (try Some(graft.sources.GraftLogCache
-      .corpusFingerprint(dir, "documents.parquet"))
+    (try Some(graft.util.ArtifactCache.fingerprintOf(
+      java.nio.file.Paths.get(dir, "documents.parquet")))
     catch { case scala.util.control.NonFatal(_) => None })
       .map(f => s"$dir|$f")
 

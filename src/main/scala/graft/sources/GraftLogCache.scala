@@ -5,81 +5,38 @@ import graft.storage.ParquetLogBackend
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
 /** Builds — once per testdata dir — an on-disk event log mirroring the
   * `events` table (version = event_id + 1, label = event_type, payload =
   * props, appended in event_id order through the real commit sequencer),
   * so `format("graft")` scans can be oracle-checked and benched against
   * the same parquet the relational queries read.
   *
-  * Cached under the JVM temp dir keyed by the testdata path AND the events
-  * parquet's name+size+mtime fingerprint — a regenerated table at the same path
-  * gets a fresh log instead of a silently stale one (the oracle reads the
-  * parquet directly, so staleness here would surface as a hash mismatch).
-  * Built into a staging directory and atomically renamed, so concurrent
-  * builders race benignly (the loser discards its identical staging copy)
-  * and a crashed build can never be mistaken for a complete log. */
+  * Cached through [[graft.util.ArtifactCache]] keyed by the events
+  * parquet's fingerprint — a regenerated table at the same path gets a
+  * fresh log instead of a silently stale one (the oracle reads the
+  * parquet directly, so staleness here would surface as a hash mismatch). */
 object GraftLogCache {
 
-  /** Fingerprint of every regular file under `dir/table`: relative NAME +
-    * size + mtime per file, md5'd. File names matter — Spark randomizes
-    * part-file names on every write, so an overwrite with equal total
-    * bytes landing in the same millisecond (dictionary-encoded same-shape
-    * corpora do collide on size) still changes the key; size+mtime alone
-    * does not guarantee that. Shared by every corpus-keyed cache in the
-    * engine; throws if the directory is unreadable — callers that can fall
-    * back to uncached work catch around THIS call only. */
-  def corpusFingerprint(dir: String, table: String): String = {
-    import scala.jdk.CollectionConverters._
-    val src = Paths.get(dir, table)
-    val files = scala.util.Using.resource(Files.walk(src))(
-      _.iterator().asScala.filter(Files.isRegularFile(_)).toList)
-    val entries = files.map { f =>
-      s"${src.relativize(f)}:${Files.size(f)}:" +
-        s"${Files.getLastModifiedTime(f).toMillis}"
-    }.sorted
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
-
-  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
-    val fingerprint = corpusFingerprint(sfDir, "events.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$sfDir|$fingerprint".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val base = Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-logcache-$key")
-    if (Files.exists(base.resolve("meta.json"))) return base.toString
-
-    val staging = Paths.get(
-      base.toString + ".build-" + java.util.UUID.randomUUID().toString.take(8))
-    val b = ParquetLogBackend.create(spark, staging.toString,
-      compactThreshold = 1000000, compactIntervalMs = 0)
-    try {
-      // single-writer ingest (the commit sequencer is the documented write
-      // surface); bounded — the events table tops out at 100k rows (sf0.1)
-      val rows = graft.util.Tables(spark, sfDir, "events")
-        .select(col("event_id"), col("event_type"), col("props"))
-        .orderBy("event_id")
-        .collect()
-      rows.grouped(10000).zipWithIndex.foreach { case (batch, i) =>
-        b.appendMulti(
-          batch.toSeq.map(r => EventData(r.getString(1), r.getString(2))))
-        if (i % 2 == 1) b.compact() // ~20k-row segments
-      }
-      b.compact()
-    } finally b.close()
-
-    try Files.move(staging, base, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException |
-          _: java.nio.file.DirectoryNotEmptyException |
-          _: java.nio.file.AccessDeniedException =>
-        // another process won the race; its copy is identical
-        ParquetLogBackend.deleteRecursively(staging)
+  def ensure(spark: SparkSession, sfDir: String): String =
+    graft.util.ArtifactCache.ensure(
+      java.nio.file.Paths.get(sfDir, "events.parquet"),
+      "graft-logcache", "meta.json") { staging =>
+      val b = ParquetLogBackend.create(spark, staging,
+        compactThreshold = 1000000, compactIntervalMs = 0)
+      try {
+        // single-writer ingest (the commit sequencer is the documented
+        // write surface); bounded — the events table tops out at 100k
+        // rows (sf0.1)
+        val rows = graft.util.Tables(spark, sfDir, "events")
+          .select(col("event_id"), col("event_type"), col("props"))
+          .orderBy("event_id")
+          .collect()
+        rows.grouped(10000).zipWithIndex.foreach { case (batch, i) =>
+          b.appendMulti(
+            batch.toSeq.map(r => EventData(r.getString(1), r.getString(2))))
+          if (i % 2 == 1) b.compact() // ~20k-row segments
+        }
+        b.compact()
+      } finally b.close()
     }
-    base.toString
-  }
 }

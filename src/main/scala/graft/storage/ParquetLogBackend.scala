@@ -50,8 +50,8 @@ final class ParquetLogBackend private (
   // no point after open() does query planning list segments/ or read
   // footers — at 100TB / years of history, directory listing would
   // dominate planning long before data bytes matter. Rebuilt at open from
-  // one listing (ranges parsed from the self-describing file names, one
-  // footer job only for legacy unnamed files); guarded by ioLock.
+  // one listing (ranges parsed from the self-describing file names);
+  // guarded by ioLock.
   private val manifest = ArrayBuffer.empty[(String, Long, Long)]
   // ioLock guards channel + tail + watermark (held briefly); compactLock
   // serializes whole compactions (two concurrent compacts would both copy
@@ -382,32 +382,11 @@ final class ParquetLogBackend private (
   }
 
   /** One listing of segments/ (open-time only), ranges from the
-    * self-describing names; legacy files without one get their range from
-    * a single footer-stat job and keep working. */
+    * self-describing names. */
   private def rebuildManifest(): Unit = {
     manifest.clear()
-    if (!Files.exists(segmentsDir)) return
-    val parquetFiles = scala.util.Using.resource(Files.list(segmentsDir))(
-      _.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList)
-    val legacy = ArrayBuffer.empty[String]
-    parquetFiles.foreach { p =>
-      p.getFileName.toString match {
-        case ParquetLogBackend.SegmentName(v0, v1) =>
-          manifest += ((p.toString, v0.toLong, v1.toLong))
-        case _ => legacy += p.toString
-      }
-    }
-    if (legacy.nonEmpty) {
-      import org.apache.spark.sql.functions.{input_file_name, min => smin}
-      spark.read.schema(EventSchema.schema).parquet(legacy.toSeq: _*)
-        .groupBy(input_file_name().as("f"))
-        .agg(smin("version").as("v0"), smax("version").as("v1"))
-        .collect()
-        .foreach { r =>
-          val path = Paths.get(java.net.URI.create(r.getString(0)).getPath)
-          manifest += ((path.toString, r.getLong(1), r.getLong(2)))
-        }
-    }
+    if (Files.exists(segmentsDir))
+      manifest ++= ParquetLogBackend.listSegments(segmentsDir)
   }
 
   private def recover(): Unit = {
@@ -480,6 +459,22 @@ object ParquetLogBackend {
 
   private val SegmentName = """seg-(\d{19})-(\d{19})-[0-9a-f]{8}\.parquet""".r
 
+  /** (path, min version, max version) of every parquet file in `d`, from
+    * the self-describing names. A parquet file without one is not a
+    * segment any writer produced: it fails loudly rather than being
+    * scanned with a guessed range. */
+  private def listSegments(d: Path): Seq[(String, Long, Long)] =
+    scala.util.Using.resource(Files.list(d))(
+      _.iterator().asScala
+        .filter(_.toString.endsWith(".parquet"))
+        .map { p =>
+          p.getFileName.toString match {
+            case SegmentName(v0, v1) => (p.toString, v0.toLong, v1.toLong)
+            case _ => throw new IllegalStateException(
+              s"not a log segment (no seg-<v0>-<v1>-<id> name): $p")
+          }
+        }.toList)
+
   /** Read-only point-in-time view of a log directory for out-of-process
     * readers (the `graft` DataSource V2): the segment files with their
     * version ranges (parsed from the self-describing names — no footer
@@ -488,8 +483,8 @@ object ParquetLogBackend {
     * compaction racing this call can only move events from the already-read
     * tail into a segment we then also list — removed by the watermark
     * filter — never hide them (listing first would race rotation, which
-    * deletes compacted lines). Files predating self-describing names get
-    * their range from a driver-side footer-stats read (no data pages). */
+    * deletes compacted lines). A parquet file without a segment name
+    * fails the read. */
   private[graft] def readView(
       path: String): (Seq[(String, Long, Long)], Seq[StoredEvent]) = {
     val dir = Paths.get(path)
@@ -513,18 +508,6 @@ object ParquetLogBackend {
         }
       }
     }
-    def list(d: Path): Seq[(String, Long, Long)] =
-      scala.util.Using.resource(Files.list(d))(
-        _.iterator().asScala
-          .filter(_.toString.endsWith(".parquet"))
-          .map { p =>
-            p.getFileName.toString match {
-              case SegmentName(v0, v1) => (p.toString, v0.toLong, v1.toLong)
-              case _ =>
-                val (v0, v1) = cachedFooterRange(p)
-                (p.toString, v0, v1)
-            }
-          }.toList)
     // A coalesceSegments swap (segments -> segments.old, staging ->
     // segments) has a window where segments/ does not exist; segments.old
     // holds the COMPLETE pre-rewrite history then, so falling back to it
@@ -532,17 +515,17 @@ object ParquetLogBackend {
     // itself can also race the first move — retry covers it.
     val segsDir = dir.resolve("segments")
     val oldDir = dir.resolve("segments.old")
-    def listSegments(attempt: Int = 0): Seq[(String, Long, Long)] =
+    def listView(attempt: Int = 0): Seq[(String, Long, Long)] =
       try {
-        if (Files.exists(segsDir)) list(segsDir)
-        else if (Files.exists(oldDir)) list(oldDir)
+        if (Files.exists(segsDir)) listSegments(segsDir)
+        else if (Files.exists(oldDir)) listSegments(oldDir)
         else Nil
       } catch {
         case _: java.io.UncheckedIOException | _: java.nio.file.NoSuchFileException
             if attempt < 3 =>
-          listSegments(attempt + 1)
+          listView(attempt + 1)
       }
-    val segs = listSegments()
+    val segs = listView()
     val watermark = if (segs.isEmpty) 0L else segs.map(_._3).max
     (segs, tail.filter(_.version > watermark).toList)
   }
@@ -553,40 +536,6 @@ object ParquetLogBackend {
         _.sorted(java.util.Comparator.reverseOrder[Path]())
           .forEach(f => Files.deleteIfExists(f)))
     }
-
-  /** Footer-derived ranges for legacy unnamed segment files, cached by
-    * (path, size, mtime): segments are immutable once written, but the
-    * streaming path calls readView at least twice per trigger — without
-    * this, a log with legacy files pays repeated per-trigger footer I/O.
-    * Bounded: entries exist only for pre-self-describing-name files. */
-  private val footerRangeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), (Long, Long)]()
-
-  private def cachedFooterRange(p: Path): (Long, Long) = {
-    val attrs = Files.readAttributes(p,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    footerRangeCache.computeIfAbsent(
-      (p.toString, attrs.size(), attrs.lastModifiedTime().toMillis),
-      _ => footerVersionRange(p.toString))
-  }
-
-  /** min/max of the `version` column from parquet footer statistics —
-    * legacy-segment fallback only; reads footers, never data pages. */
-  private def footerVersionRange(file: String): (Long, Long) = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file),
-      new org.apache.hadoop.conf.Configuration())
-    scala.util.Using.resource(ParquetFileReader.open(in)) { r =>
-      val stats = r.getFooter.getBlocks.asScala.flatMap(
-        _.getColumns.asScala.find(_.getPath.toDotString == "version")
-          .map(_.getStatistics))
-      require(stats.nonEmpty, s"no version statistics in $file")
-      (stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
-        stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
-    }
-  }
 
   /** Create a new log directory (≙ file.Create, file.go:128-161). */
   def create(

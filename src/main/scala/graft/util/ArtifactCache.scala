@@ -4,24 +4,34 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** The shared fingerprint-keyed artifact-cache discipline for query
   * entries that exercise a PERSISTED artifact (IVF/PQ indexes, dedup
-  * state): build once per source-data fingerprint into a staging dir,
-  * atomically rename into place, and serve every later run from the
-  * cached copy. Concurrent builders race benignly (the loser keeps the
-  * winner's copy); a crashed build leaves only an unreachable staging
-  * dir. Factored from the Similarity entries' `ensureEmbArtifact` so the
-  * Dedup state entries ride the identical lifecycle.
+  * state, the event-log mirror, the lexical search index): build once per
+  * source-data fingerprint into a staging dir, atomically rename into
+  * place, and serve every later run from the cached copy. Concurrent
+  * builders race benignly (the loser keeps the winner's copy); a crashed
+  * build leaves only an unreachable staging dir.
   */
 object ArtifactCache {
 
-  /** Size+mtime fingerprint of a source file/directory tree — cheap, and
-    * exactly as stale-proof as the testdata regeneration story needs. */
+  /** Fingerprint of every regular file under `src` (a file or a
+    * directory tree): relative NAME + size + mtime per file, md5'd. File
+    * names matter — Spark randomizes part-file names on every write, so an
+    * overwrite with equal total bytes landing in the same millisecond
+    * (dictionary-encoded same-shape corpora do collide on size) still
+    * changes the key; size+mtime alone does not guarantee that. The one
+    * fingerprint every corpus-keyed cache in the engine shares; throws if
+    * `src` is unreadable — callers that can fall back to uncached work
+    * catch around THIS call only. */
   def fingerprintOf(src: Path): String = {
     import scala.jdk.CollectionConverters._
     val files = scala.util.Using.resource(Files.walk(src))(
       _.iterator().asScala.filter(Files.isRegularFile(_)).toList)
-    val size = files.map(Files.size).sum
-    val mtime = (0L +: files.map(Files.getLastModifiedTime(_).toMillis)).max
-    s"$size-$mtime"
+    val entries = files.map { f =>
+      s"${src.relativize(f)}:${Files.size(f)}:" +
+        s"${Files.getLastModifiedTime(f).toMillis}"
+    }.sorted
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(entries.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
   }
 
   /** Return the cached artifact dir for (`src`, `prefix`), building it

@@ -246,12 +246,11 @@ class CliSpec extends AnyFunSuite {
     assert(graft.operators.DedupState.load(state).nDocs === 3L)
   }
 
-  test("upgrade-state materializes a synthesized legacy state's leaves in place; state-health reports the verdict") {
+  test("state-health reports the verdict of an admitted state") {
     import spark.implicits._
-    val state = Files.createTempDirectory("graftcli-upg").toString
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val state = Files.createTempDirectory("graftcli-health").toString
     def dropDir(rows: (Long, String)*): String = {
-      val d = Files.createTempDirectory("graftcli-upgdrop").toString
+      val d = Files.createTempDirectory("graftcli-healthdrop").toString
       rows.toSeq.toDF("doc_id", "text").write.mode("overwrite").parquet(d)
       d
     }
@@ -262,45 +261,11 @@ class CliSpec extends AnyFunSuite {
       }
       buf.toString("UTF-8")
     }
-    run("admit", state, dropDir(0L -> base,
+    run("admit", state, dropDir(
+      0L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
       2L -> "one two three four five six seven eight"))
     run("admit", state,
       dropDir(5L -> "fresh novel content with its own distinct tokens"))
-    // synthesize the PRE-r15 on-disk layout: strip every delta's
-    // pre-banded leaves, forcing the derive-on-read path
-    val h0 = graft.operators.DedupState.load(state)
-    h0.deltas.foreach { d =>
-      Seq("bands", "ebands").foreach { leaf =>
-        graft.storage.ParquetLogBackend.deleteRecursively(
-          java.nio.file.Paths.get(state, d.name, leaf))
-      }
-    }
-    val probe = Seq(
-      (10L, base), // near/exact dup of state content
-      (11L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
-      (12L, "entirely unrelated probe text tokens"))
-      .toDF("doc_id", "text")
-    val before = graft.operators.DedupState
-      .verdicts(spark, graft.operators.DedupState.load(state), probe)
-      .orderBy("doc_id").collect().toSeq
-
-    val up = run("upgrade-state", state)
-    assert(up.contains("materialized 4 leaf(s) across 2 delta(s)"), up)
-    h0.deltas.foreach { d =>
-      assert(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(state, d.name, "bands")))
-      assert(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(state, d.name, "ebands")))
-    }
-    // verdicts bit-identical: derive-on-read and the materialized leaves
-    // run the same per-delta capped banding
-    val after = graft.operators.DedupState
-      .verdicts(spark, graft.operators.DedupState.load(state), probe)
-      .orderBy("doc_id").collect().toSeq
-    assert(after === before)
-    // idempotent: nothing left to materialize
-    assert(run("upgrade-state", state)
-      .contains("materialized 0 leaf(s)"))
 
     val health = run("state-health", state)
     assert(health.contains("deltas=2") &&

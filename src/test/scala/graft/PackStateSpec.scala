@@ -189,8 +189,12 @@ class PackStateSpec extends AnyFunSuite {
       PackState.bins(spark, h).collect()
     }
     assert(e.getMessage != null)
-    // the OPTIONAL closed/ leaf still reads empty when absent
-    assert(PackState.binsClosed(spark, h).count() === 0L)
+    // closed/ is required too: every pack writes it
+    graft.storage.ParquetLogBackend.deleteRecursively(
+      java.nio.file.Paths.get(dir, h.deltas.head.name, "closed"))
+    intercept[Exception] {
+      PackState.binsClosed(spark, h).count()
+    }
   }
 
   test("a closed bin is never reused; new bins continue the seq numbering past it") {
@@ -214,30 +218,26 @@ class PackStateSpec extends AnyFunSuite {
       Seq((1L, 1L), (2L, 2L)))
   }
 
-  test("legacy counters without nbins derive it from the full snapshot") {
-    // build two identical one-drop states, then strip the nbins column
-    // from one delta's counters (the pre-round-16 on-disk layout, where
-    // the snapshot held EVERY bin); the next pack must behave identically
-    val dirL = tmp(); val dirN = tmp()
-    val d1 = rows(0L -> Seq(1, 2, 3), 2L -> Seq(4, 5, 6, 7, 8))
-    PackState.pack(spark, dirL, d1, "d1", P)
-    PackState.pack(spark, dirN, d1, "d1", P)
-    val delta = PackState.load(dirL, P).deltas.head.name
-    val ctrPath = s"$dirL/$delta/counters"
-    val legacy = spark.read.parquet(ctrPath)
+  test("counters without nbins fail the next pack instead of reseeding seq") {
+    // strip the nbins column from the delta's counters: reseeding seq
+    // from 0 would reuse bin 1 and 2's seqs and merge unrelated docs
+    val dir = tmp()
+    PackState.pack(spark, dir,
+      rows(0L -> Seq(1, 2, 3), 2L -> Seq(4, 5, 6, 7, 8)), "d1", P)
+    val delta = PackState.load(dir, P).deltas.head.name
+    val ctrPath = s"$dir/$delta/counters"
+    val stripped = spark.read.parquet(ctrPath)
       .select("bucket", "steps").collect().toSeq
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(legacy.asJava,
+    spark.createDataFrame(stripped.asJava,
       org.apache.spark.sql.types.StructType.fromDDL(
         "bucket bigint, steps bigint"))
       .write.mode("overwrite").parquet(ctrPath)
-    val d2 = rows(1L -> Seq(9), 3L -> Seq(10, 11, 12))
-    val hl = PackState.pack(spark, dirL, d2, "d2", P)
-    val hn = PackState.pack(spark, dirN, d2, "d2", P)
-    assert(PackState.trainingRows(spark, hl)
-      .orderBy("bucket", "seq").collect().toSeq ===
-      PackState.trainingRows(spark, hn)
-        .orderBy("bucket", "seq").collect().toSeq)
+    val e = intercept[Exception] {
+      PackState.pack(spark, dir, rows(1L -> Seq(9)), "d2", P)
+    }
+    assert(String.valueOf(e.getMessage).contains("nbins"), e.getMessage)
+    assert(PackState.load(dir, P).version === 1L, "no delta committed")
   }
 
   test("compaction carries the closed tier and the upgraded counters") {

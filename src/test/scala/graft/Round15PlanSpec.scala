@@ -12,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `bands/`/`ebands/` leaves — NO Window may run over state-side rows in
   * a verdict plan (the round-14 design re-windowed the whole state's
   * band rows on every drop, which a 10^9-doc state cannot pay) — and the
-  * write-once cap must make verdicts invariant under compaction and
-  * identical for legacy deltas whose band leaves are derived on read.
+  * write-once cap must make verdicts invariant under compaction. A delta
+  * missing a leaf fails loudly instead of being derived on read.
   */
 class Round15PlanSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
@@ -127,10 +127,10 @@ class Round15PlanSpec extends AnyFunSuite {
       r.getLong(0) == 3L && r.getAs[Boolean]("span_dup_state")))
   }
 
-  test("legacy deltas (no band leaves) derive on read with identical verdicts; compact materializes the leaves") {
+  test("a delta missing its bands leaf fails verdicts loudly, naming the leaf") {
     import spark.implicits._
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-r15legacy").toString
+      .createTempDirectory("graft-r15strip").toString
     DedupState.admit(spark, dir, Seq(
       (0L, baseText, vec(1, 0.0)))
       .toDF("doc_id", "text", "emb"), "d1")
@@ -140,26 +140,13 @@ class Round15PlanSpec extends AnyFunSuite {
     val h = DedupState.load(dir)
     val batch = Seq((1L, nearText, vec(1, 0.001)))
       .toDF("doc_id", "text", "emb")
-    val before = DedupState.verdicts(spark, h, batch)
-      .orderBy("doc_id").collect().toSeq
 
-    // strip one delta back to its round-14 layout (rows + bloom only)
-    val legacy = java.nio.file.Paths.get(dir, h.deltas.head.name)
-    for (leaf <- Seq("bands", "ebands", "spans", "spanbloom", "card"))
-      graft.storage.ParquetLogBackend
-        .deleteRecursively(legacy.resolve(leaf))
-    val after = DedupState.verdicts(spark, DedupState.load(dir), batch)
-      .orderBy("doc_id").collect().toSeq
-    assert(after === before,
-      "derived-on-read legacy band rows carry the same per-delta cap")
-
-    val hc = DedupState.compact(spark, dir)
-    val merged = java.nio.file.Paths.get(dir, hc.deltas.head.name)
-    assert(java.nio.file.Files.isDirectory(merged.resolve("bands")) &&
-      java.nio.file.Files.isDirectory(merged.resolve("ebands")),
-      "compaction upgrades legacy states to the pre-banded layout")
-    assert(DedupState.verdicts(spark, hc, batch)
-      .orderBy("doc_id").collect().toSeq === before)
+    val bands = java.nio.file.Paths.get(dir, h.deltas.head.name, "bands")
+    graft.storage.ParquetLogBackend.deleteRecursively(bands)
+    val e = intercept[Exception] {
+      DedupState.verdicts(spark, DedupState.load(dir), batch).collect()
+    }
+    assert(e.getMessage.contains(s"${h.deltas.head.name}/bands"), e.getMessage)
   }
 
   test("the audit card records every offered document, admitted and rejected") {

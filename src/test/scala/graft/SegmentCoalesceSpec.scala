@@ -95,4 +95,29 @@ class SegmentCoalesceSpec extends AnyFunSuite {
       assert(reopened.snapshot().count() == 1L)
     } finally reopened.close()
   }
+
+  test("an unnamed segment file fails open and the graft source, naming the file") {
+    val dir = Files.createTempDirectory("graftseg").toString
+    val b = ParquetLogBackend.create(spark, dir, compactIntervalMs = 0)
+    val log = new EventLog(b)
+    (1 to 3).foreach(i => log.append(EventData("e", s"""{"i":$i}""")))
+    b.compact()
+    log.close()
+    // a readable event parquet under a name no writer produces
+    val segs = Paths.get(dir, "segments")
+    val seg = scala.util.Using.resource(Files.list(segs))(
+      _.filter(_.toString.endsWith(".parquet")).findFirst().get())
+    Files.copy(seg, segs.resolve("part-00000.parquet"))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+    val eOpen = intercept[IllegalStateException] {
+      ParquetLogBackend.open(spark, dir, compactIntervalMs = 0).close()
+    }
+    assert(eOpen.getMessage.contains("part-00000.parquet"), eOpen.getMessage)
+    val eRead = intercept[Exception] {
+      spark.read.format("graft").load(dir).collect()
+    }
+    assert(messages(eRead).contains("part-00000.parquet"), messages(eRead))
+  }
 }

@@ -91,13 +91,7 @@ class TokenPipelineSpec extends AnyFunSuite {
     }
     // the composed pipeline trained through the PERSISTED BpeModel: the
     // fingerprint-keyed artifact directory must now exist with >=1 version
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((sfDir + "|" + graft.sources.GraftLogCache
-        .corpusFingerprint(sfDir, "documents.parquet")).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft-bpemodel-$key").toString
+    val root = TextAnalysis.bpeModelRoot(spark, sfDir).get
     assert(BpeModel.versions(root).nonEmpty, s"no persisted model at $root")
     // and the persisted merges round-trip equal to the in-memory trainer's
     val persisted = BpeModel.load(spark, root)
