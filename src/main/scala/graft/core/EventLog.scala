@@ -13,9 +13,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * backend's sequencer, publishes the new version to subscribers, and
   * exposes scans as DataFrames.
   *
-  * Scans never sort globally: versions are dense (see [[EventSchema]]), so
-  * `version_next` is arithmetic (`v+1`, 0 at the head) and ordering is a
-  * parquet-range read, not a shuffle.
+  * Versions are dense (see [[EventSchema]]), so `version_next` is
+  * arithmetic (`v+1`, 0 at the head; no window), and a paged scan knows its
+  * exact version range up front. `scan` still sorts (`orderBy` + `limit`),
+  * but that range is both the backend's planning bound and a pushed parquet
+  * predicate, so a page's sort sees only the page's rows plus the
+  * file-granular overspill of row groups that straddle the range.
   */
 final class EventLog(backend: EventLogBackend) extends AutoCloseable {
   private val hub = new VersionHub
@@ -108,6 +111,11 @@ final class EventLog(backend: EventLogBackend) extends AutoCloseable {
     *
     * Output adds `version_next` (0 at the log head) — derived, never stored,
     * matching read_event.go:17.
+    *
+    * With `limit = Some(n)` the page is `[max(1, v-n-skip+1), v]` reverse
+    * and `[v, v+n+skip-1]` forward (skip = 1 with `skipFirst`), read with
+    * both bounds as its row predicate — the reference's seek-and-stop
+    * (file.go:207-306), so a page costs O(page), not O(log).
     */
   def scan(
       version: Long,
@@ -120,19 +128,25 @@ final class EventLog(backend: EventLogBackend) extends AutoCloseable {
     // stamp rows past `latest` with version_next=0 and truncate cursor
     // clients early. The range bounds let the backend prune whole segment
     // files at plan time (superset contract — the exact filters below
-    // still apply).
-    val snap =
-      if (reverse) backend.snapshotRange(1L, version)
-      else backend.snapshotRange(version, Long.MaxValue)
+    // still apply). A forward page keeps the open upper bound here and
+    // gets its upper bound from the pushed predicate alone.
+    val span = limit.map(_.toLong + (if (skipFirst) 1L else 0L))
+    val (lo, hi) =
+      if (reverse) (span.fold(1L)(k => math.max(1L, version - k + 1L)), version)
+      else (version, span.fold(Long.MaxValue)(k => version + k - 1L))
+    val snap = backend.snapshotRange(lo, if (reverse) hi else Long.MaxValue)
     val latest = backend.version
     if (latest == 0L || version < 1L || version > latest)
       throw new Errors.ErrInvalidVersion
     val base = snap
       .withColumn("version_next",
         when(col("version") < latest, col("version") + 1L).otherwise(0L))
-    val dir0 =
-      if (reverse) base.filter(col("version") <= version).orderBy(desc("version"))
-      else base.filter(col("version") >= version).orderBy(asc("version"))
+    val inRange =
+      if (limit.isDefined) col("version").between(lo, hi)
+      else if (reverse) col("version") <= version
+      else col("version") >= version
+    val dir0 = base.filter(inRange)
+      .orderBy(if (reverse) desc("version") else asc("version"))
     val cursored = if (skipFirst) dir0.offset(1) else dir0
     limit.fold(cursored)(n => cursored.limit(n))
   }

@@ -58,10 +58,12 @@ trait EventLogBackend extends AutoCloseable {
   def snapshot(): DataFrame
 
   /** Version-bounded snapshot: contains AT LEAST every committed event with
-    * version in [minVersion, maxVersion], possibly more — pruning is
+    * version in [minVersion, maxVersion], possibly more — segment pruning is
     * file-granular, so callers still apply their exact predicates. Backends
     * with segment statistics use the bounds to skip whole files at plan
-    * time; the default is the full snapshot. */
+    * time; in-memory rows (the whole [[InMemoryBackend]] store, the
+    * [[ParquetLogBackend]] tail) are sliced to the range exactly. The
+    * default is the full snapshot. */
   def snapshotRange(minVersion: Long, maxVersion: Long): DataFrame = snapshot()
 
   /** Payload byte-size limit enforced on append. */

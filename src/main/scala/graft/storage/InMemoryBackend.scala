@@ -4,11 +4,10 @@ import graft.core.EventSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 /** Volatile in-memory backend ≙ reference eventlog/inmem (inmem.go:33-50).
-  * Dev/test scale: the whole log lives on the driver; `snapshot()` hands it
-  * to Spark via createDataFrame. */
+  * Dev/test scale: the whole log lives on the driver; `snapshotRange` hands
+  * the requested slice of it to Spark via createDataFrame. */
 final class InMemoryBackend(
     spark: SparkSession,
     override val metadata: Map[String, String] = Map.empty,
@@ -25,10 +24,14 @@ final class InMemoryBackend(
       events: Seq[StoredEvent], tag: Option[CommitTag]): Unit =
     store.synchronized { store ++= events }
 
-  override def snapshot(): DataFrame = {
+  override def snapshot(): DataFrame = snapshotRange(1L, Long.MaxValue)
+
+  /** Exactly the events in [minVersion, maxVersion]: the store is dense
+    * from version 1, so a page copies only its own rows. */
+  override def snapshotRange(minVersion: Long, maxVersion: Long): DataFrame = {
     // immutable copy = snapshot isolation
-    val rows = store.synchronized(store.toList).map(_.toRow)
-    spark.createDataFrame(rows.asJava, EventSchema.schema)
+    StoredEvent.frame(spark,
+      store.synchronized(StoredEvent.slice(store, minVersion, maxVersion)))
   }
 
   override def close(): Unit = store.synchronized(store.clear())

@@ -356,14 +356,16 @@ final class ParquetLogBackend private (
     * Files whose [min,max] version range misses [minVersion,maxVersion]
     * never reach Spark's planner: no directory listing, no footer reads,
     * no per-file tasks — the row-level predicate stays the caller's job
-    * (file granularity returns a superset). */
+    * (file granularity returns a superset). The tail, dense from
+    * `segmentMaxVersion + 1`, is sliced exactly: a page copies only its own
+    * tail rows. */
   override def snapshotRange(minVersion: Long, maxVersion: Long): DataFrame = {
     val (t, watermark, files) = ioLock.synchronized(
-      (tail.toList, segmentMaxVersion,
+      (StoredEvent.slice(tail, minVersion, maxVersion), segmentMaxVersion,
         manifest.collect {
           case (f, v0, v1) if v1 >= minVersion && v0 <= maxVersion => f
         }.toList))
-    val tailDf = spark.createDataFrame(t.map(_.toRow).asJava, EventSchema.schema)
+    val tailDf = StoredEvent.frame(spark, t)
     if (files.nonEmpty) {
       // watermark bound kept defensively (pushed to row-group stats, free):
       // manifest and watermark are captured atomically so it's a no-op in

@@ -2,8 +2,10 @@ package graft.storage
 
 import graft.core._
 import graft.exprs.EventOps
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** A fully-formed log entry as held by backends / written to storage. */
 final case class StoredEvent(
@@ -15,6 +17,31 @@ final case class StoredEvent(
     checksum: Long) {
   def toRow: Row =
     Row(version, versionPrevious, timestamp, label, payload, checksum)
+}
+
+object StoredEvent {
+  /** The events of `run` with version in [minVersion, maxVersion]. `run`
+    * must be dense and ascending (what the sequencer appends), so the slice
+    * is index arithmetic off its first version, not a filter. */
+  def slice(
+      run: scala.collection.IndexedSeq[StoredEvent],
+      minVersion: Long,
+      maxVersion: Long): List[StoredEvent] =
+    if (run.isEmpty || maxVersion < run.head.version) Nil
+    else {
+      val base = run.head.version
+      val from = math.min(math.max(minVersion, base) - base, run.length.toLong)
+      val until = math.min(maxVersion - base + 1L, run.length.toLong)
+      run.slice(from.toInt, until.toInt).toList
+    }
+
+  /** Driver-held events as one local partition. A page sliced exactly to
+    * `limit` rows lets Spark drop the limit; one partition then keeps the
+    * remaining sort exchange-free (one job) instead of range-partitioning
+    * a handful of rows. */
+  def frame(spark: SparkSession, events: Seq[StoredEvent]): DataFrame =
+    spark.createDataFrame(events.map(_.toRow).asJava, EventSchema.schema)
+      .coalesce(1)
 }
 
 /** Transactional tag for exactly-once streaming sinks: identifies one

@@ -14,6 +14,9 @@ class ScanPushdownSpec extends AnyFunSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  private def segFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
+
   test("scan version predicate reaches the parquet segment scan") {
     val dir = Files.createTempDirectory("graftpush").toString
     val log = new EventLog(ParquetLogBackend.create(spark, dir,
@@ -54,8 +57,6 @@ class ScanPushdownSpec extends AnyFunSuite {
           log.append(EventData(s"s$seg", s"""{"i":$i}""")))
         backend.compact()
       }
-      def segFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
-        df.inputFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
       val all = segFiles(log.toDF)
       assert(all.size == 3 && all.forall(_.startsWith("seg-")), all)
       // forward scan from v25 → only the [21,30] file is planned
@@ -96,6 +97,62 @@ class ScanPushdownSpec extends AnyFunSuite {
       assert(log.toDF.count() == 30L)
       assert(log.checkIntegrity().count() == 0L)
     } finally log.close()
+  }
+
+  /** Segments [1,10] [11,20] [21,30] plus the in-memory tail [31,35]. */
+  private def segmentedLog(prefix: String): EventLog = {
+    val backend = ParquetLogBackend.create(spark,
+      Files.createTempDirectory(prefix).toString,
+      compactThreshold = 1000, compactIntervalMs = 0)
+    val log = new EventLog(backend)
+    (1 to 3).foreach { seg =>
+      (1 to 10).foreach(i => log.append(EventData(s"s$seg", s"""{"i":$i}""")))
+      backend.compact()
+    }
+    (1 to 5).foreach(i => log.append(EventData("t", s"""{"i":$i}""")))
+    log
+  }
+
+  test("paged scans plan only their page") {
+    val log = segmentedLog("graftpage")
+    try {
+      // reverse page [23,25] → only the [21,30] segment
+      val mid = segFiles(log.scan(25L, reverse = true, limit = Some(3)))
+      assert(mid.size == 1 &&
+        mid.head.contains("0000000000000000021-0000000000000000030"), mid)
+      // a head page inside the tail plans no segment file at all
+      val head = segFiles(log.scan(33L, reverse = true, limit = Some(2)))
+      assert(head.isEmpty, head)
+      // forward page [5,7]: the upper bound reaches the parquet scan (read
+      // off the scan node — the plan string abbreviates long filter lists)
+      val fwd = log.scan(5L, limit = Some(3)).queryExecution.executedPlan
+      val pushed = fwd.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metadata("PushedFilters")
+      }
+      assert(pushed.size == 1 && pushed.head.contains("LessThanOrEqual(version,7)"),
+        fwd.toString.take(2000))
+    } finally log.close()
+  }
+
+  test("paged scans equal the unbounded scan's first n rows on both backends") {
+    val parquet = segmentedLog("graftpagegrid")
+    val inmem = new EventLog(new graft.storage.InMemoryBackend(spark))
+    try {
+      (1 to 35).foreach(i => inmem.append(EventData(s"m$i", s"""{"i":$i}""")))
+      for {
+        (name, log) <- Seq("parquet" -> parquet, "inmem" -> inmem)
+        v <- Seq(1L, 10L, 11L, 30L, 31L, 35L)
+        n <- Seq(1, 3, 12, 50)
+        reverse <- Seq(false, true)
+        skipFirst <- Seq(false, true)
+      } {
+        val paged = log.scan(v, reverse, Some(n), skipFirst).collect().toSeq
+        val full = log.scan(v, reverse, None, skipFirst).limit(n).collect().toSeq
+        assert(paged == full,
+          s"$name scan($v, reverse=$reverse, n=$n, skipFirst=$skipFirst)")
+      }
+    } finally { parquet.close(); inmem.close() }
   }
 
   test("pipeline operators keep their audited exchange shapes") {
