@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.core.{Errors, EventLog}
+import graft.core.{Errors, EventLog, EventSchema}
 import graft.exprs.EventOps
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -28,7 +28,7 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 final class HttpApiServer(
     log: EventLog,
     port: Int = 0,
-    val maxReadBatchSize: Int = 1000,
+    val maxReadBatchSize: Int = EventSchema.MaxReadBatchSize,
     val wsPingIntervalMs: Long = 30000,
     val wsWriteTimeoutMs: Long = 1000,
     val httpReadTimeoutMs: Long = 2000) {

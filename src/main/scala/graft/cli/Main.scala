@@ -1,7 +1,7 @@
 package graft.cli
 
 import graft.api.HttpApiServer
-import graft.core.EventLog
+import graft.core.{EventLog, EventSchema}
 import graft.storage.{InMemoryBackend, ParquetLogBackend}
 import org.apache.spark.sql.SparkSession
 
@@ -73,7 +73,8 @@ object Main {
   private[graft] def buildServer(log: EventLog, rest: Seq[String]): HttpApiServer =
     new HttpApiServer(log,
       port = intFlag(rest, "--http-port", 8080),
-      maxReadBatchSize = intFlag(rest, "--http-max-scan-batch-size", 1000),
+      maxReadBatchSize =
+        intFlag(rest, "--http-max-scan-batch-size", EventSchema.MaxReadBatchSize),
       httpReadTimeoutMs = durFlag(rest, "--http-read-timeout", 2000))
 
   private def serve(log: EventLog, rest: Seq[String]): Unit = {

@@ -45,6 +45,10 @@ object EventSchema {
 
   val DefaultPayloadLimit: Int = 1 << 20 // 1 MiB (reference file.go:33)
   val MinPayloadLen: Int = 7 // len("""{"x":0}""") (reference file.go:36)
+  /** Most events one read returns (reference bench_test.go:78-101): the
+    * HTTP scan cap, and the row bound of a log segment's Parquet pages, so
+    * a page-sized read decodes at most two pages. */
+  val MaxReadBatchSize: Int = 1000
 }
 
 /** Error contract — status strings are part of the reference's API surface

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{EventData, EventLog}
+import graft.core.{EventData, EventLog, EventSchema}
 import graft.storage.ParquetLogBackend
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -135,15 +135,42 @@ class ScanPushdownSpec extends AnyFunSuite {
     } finally log.close()
   }
 
+  /** `events` appended in read-batch commits, then [1, events] compacted
+    * into one segment, plus the in-memory tail [events+1, events+5]. */
+  private def bigSegmentLog(prefix: String, events: Int): EventLog = {
+    val backend = ParquetLogBackend.create(spark,
+      Files.createTempDirectory(prefix).toString,
+      compactThreshold = events + 1000, compactIntervalMs = 0)
+    val log = new EventLog(backend)
+    appendBatches(log, 1 to events)
+    backend.compact()
+    appendBatches(log, events + 1 to events + 5)
+    log
+  }
+
+  private def appendBatches(log: EventLog, is: Range): Unit =
+    is.grouped(EventSchema.MaxReadBatchSize).foreach(g =>
+      log.appendMulti(g.map(i => EventData(s"b${i % 7}", s"""{"i":$i}"""))))
+
   test("paged scans equal the unbounded scan's first n rows on both backends") {
     val parquet = segmentedLog("graftpagegrid")
     val inmem = new EventLog(new graft.storage.InMemoryBackend(spark))
+    // one 10,000-event segment: 1000-row Parquet pages, probed on and
+    // beside the page boundaries and the segment/tail boundary
+    val bigParquet = bigSegmentLog("graftpagegrid2", 10000)
+    val bigInmem = new EventLog(new graft.storage.InMemoryBackend(spark))
     try {
       (1 to 35).foreach(i => inmem.append(EventData(s"m$i", s"""{"i":$i}""")))
+      appendBatches(bigInmem, 1 to 10005)
+      val small = (Seq(1L, 10L, 11L, 30L, 31L, 35L), Seq(1, 3, 12, 50))
+      val big = (Seq(1L, 999L, 1000L, 1001L, 2000L, 2001L, 10000L, 10001L),
+        Seq(3, EventSchema.MaxReadBatchSize))
       for {
-        (name, log) <- Seq("parquet" -> parquet, "inmem" -> inmem)
-        v <- Seq(1L, 10L, 11L, 30L, 31L, 35L)
-        n <- Seq(1, 3, 12, 50)
+        (name, log, (vs, ns)) <- Seq(("parquet", parquet, small),
+          ("inmem", inmem, small), ("parquet-big", bigParquet, big),
+          ("inmem-big", bigInmem, big))
+        v <- vs
+        n <- ns
         reverse <- Seq(false, true)
         skipFirst <- Seq(false, true)
       } {
@@ -152,7 +179,17 @@ class ScanPushdownSpec extends AnyFunSuite {
         assert(paged == full,
           s"$name scan($v, reverse=$reverse, n=$n, skipFirst=$skipFirst)")
       }
-    } finally { parquet.close(); inmem.close() }
+      // a forward page inside the segment decodes at most the two Parquet
+      // pages its range touches, not all 10,000 rows
+      val fwd = bigParquet.scan(4500L, limit = Some(EventSchema.MaxReadBatchSize))
+      assert(fwd.collect().length == EventSchema.MaxReadBatchSize)
+      val read = fwd.queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metrics("numOutputRows").value
+      }
+      assert(read.size == 1 && read.head >= EventSchema.MaxReadBatchSize &&
+        read.head <= 2L * EventSchema.MaxReadBatchSize, s"rows read from parquet: $read")
+    } finally { parquet.close(); inmem.close(); bigParquet.close(); bigInmem.close() }
   }
 
   test("pipeline operators keep their audited exchange shapes") {

@@ -1,24 +1,78 @@
 package graft
 
-import graft.core.{EventData, EventLog}
+import graft.core.{EventData, EventLog, EventSchema}
 import graft.storage.ParquetLogBackend
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Segment file-count hygiene: timer compaction writes one small parquet
   * file per interval, so at scale the file COUNT (not bytes) would drown
   * scan planning. coalesceSegments rewrites the directory crash-safely;
-  * open() rolls back an interrupted swap.
+  * open() rolls back an interrupted swap. Both segment writes (compaction
+  * and coalescing) share one file layout, checked from the footers.
   */
 class SegmentCoalesceSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
-  private def parquetFiles(dir: String): Int = {
+  private def segments(dir: String): Seq[Path] = {
     val p = Paths.get(dir, "segments")
-    if (!Files.exists(p)) 0
+    if (!Files.exists(p)) Nil
     else scala.util.Using.resource(Files.list(p))(
-      _.filter(_.toString.endsWith(".parquet")).count().toInt)
+      _.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList)
+  }
+
+  private def parquetFiles(dir: String): Int = segments(dir).size
+
+  /** Codec of every column chunk and row count of every page in the
+    * offset index, from the file's footer. */
+  private def layout(file: Path): (Set[CompressionCodecName], Seq[Long]) = {
+    val in = HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), spark.sessionState.newHadoopConf())
+    scala.util.Using.resource(ParquetFileReader.open(in)) { r =>
+      val chunks = r.getFooter.getBlocks.asScala.toSeq
+        .flatMap(b => b.getColumns.asScala.map(b -> _))
+      val pageRows = chunks.flatMap { case (b, c) =>
+        val oi = r.readOffsetIndex(c)
+        assert(oi != null, s"no offset index for ${c.getPath} in $file")
+        (0 until oi.getPageCount).map(i =>
+          oi.getLastRowIndex(i, b.getRowCount) - oi.getFirstRowIndex(i) + 1)
+      }
+      (chunks.map(_._2.getCodec).toSet, pageRows)
+    }
+  }
+
+  test("both segment writes lay out zstd with read-batch-sized pages") {
+    val dir = Files.createTempDirectory("graftseg").toString
+    val b = ParquetLogBackend.create(spark, dir,
+      compactThreshold = 100000, compactIntervalMs = 0)
+    val log = new EventLog(b)
+    try {
+      // compact() segments: [1,2500] (3 pages a column) and [2501,2600]
+      Seq(1 to 2500, 2501 to 2600).foreach { vs =>
+        vs.grouped(500).foreach(g => log.appendMulti(
+          g.map(i => EventData("e", s"""{"i":$i,"pad":"${"x" * (i % 50)}"}"""))))
+        b.compact()
+      }
+      def check(what: String): Unit = segments(dir).foreach { f =>
+        val (codecs, pageRows) = layout(f)
+        assert(codecs == Set(CompressionCodecName.ZSTD), s"$what $f: $codecs")
+        assert(pageRows.forall(_ <= EventSchema.MaxReadBatchSize),
+          s"$what $f: page rows ${pageRows.max}")
+      }
+      assert(parquetFiles(dir) == 2)
+      check("compact")
+      assert(segments(dir).map(layout(_)._2.size).max > EventSchema.schema.size,
+        "the 2,500-event segment must span more than one page a column")
+      b.coalesceSegments()
+      assert(parquetFiles(dir) == 1)
+      check("coalesceSegments")
+      assert(log.scan(1L).count() == 2600L)
+    } finally log.close()
   }
 
   test("coalesceSegments shrinks file count, preserves every event") {
