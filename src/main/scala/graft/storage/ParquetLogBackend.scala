@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max => smax}
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -20,9 +19,14 @@ import scala.jdk.CollectionConverters._
   * pathological (SURVEY.md §7.3), so the roles are split:
   *
   *  - `commits.jsonl` — the durability + atomicity point. One fsync'd line
-  *    per commit; a multi-append is one line, hence all-or-nothing.
+  *    per commit; a multi-append is one line, hence all-or-nothing. A torn
+  *    final line (a write whose fsync never returned) is cut on open.
   *  - `segments/` — columnar home of compacted history; what scans read at
-  *    scale (parallel, prunable, column-projected). Segments are zstd
+  *    scale (parallel, prunable, column-projected). [[compact]] writes a
+  *    segment from the tail it holds, with parquet-hadoop on the calling
+  *    thread (no Spark job), and fsyncs it before the commit log drops the
+  *    lines it covers; [[coalesceSegments]] rewrites existing segments in
+  *    parallel through Spark's writer, in the same layout. Segments are zstd
   *    (entropy-coded: ~0.57 disk bytes per user byte, where snappy kept
   *    ~0.90) with Parquet pages of at most one read batch
   *    ([[EventSchema.MaxReadBatchSize]] rows), so a version-bounded page
@@ -105,9 +109,10 @@ final class ParquetLogBackend private (
 
   override protected def persist(
       events: Seq[StoredEvent], tag: Option[CommitTag]): Unit = {
+    val line = ParquetLogBackend.encodeCommit(events.head.timestamp,
+      events.head.versionPrevious, events.last.version, tag, events)
     val doCompact = ioLock.synchronized {
-      val line = ParquetLogBackend.encodeCommit(events, tag)
-      channel.write(java.nio.ByteBuffer.wrap(line.getBytes(StandardCharsets.UTF_8)))
+      while (line.hasRemaining) channel.write(line)
       channel.force(true) // the durability point: one fsync per commit
       tail ++= events
       tail.length >= compactThreshold
@@ -119,30 +124,31 @@ final class ParquetLogBackend private (
     * log. Only the copied prefix is dropped from the tail; the commit log
     * retains exactly the commits past the new segment watermark, so it stays
     * proportional to the tail instead of growing with the full history (and
-    * open() replays only those). A timer compaction runs on its own thread,
-    * so appends stay concurrent with its (slow) segment write; a
-    * size-triggered one runs inside [[persist]] on the appending thread,
-    * under the sequencer lock, so appends wait for it. Crash-safe: segments
-    * are append-only and the rotation is an atomic rename; recovery trusts
-    * max(version) actually in segments. */
+    * open() replays only those). The segment is written from the rows
+    * already held here, on the calling thread, with parquet-hadoop — no
+    * Spark job. A timer compaction runs on its own thread, so appends stay
+    * concurrent with its segment write; a size-triggered one runs inside
+    * [[persist]] on the appending thread, under the sequencer lock, so
+    * appends wait for it. Crash-safe: the segment file and its directory
+    * entry are fsync'd before rotation drops the commit lines it covers,
+    * segments are append-only and the rotation is an atomic rename;
+    * recovery trusts max(version) actually in segments. */
   def compact(): Unit = compactLock.synchronized {
     val batch = ioLock.synchronized(tail.toList)
     if (batch.isEmpty) return
-    // Stage the segment in a scratch dir, then move the part file into
-    // segments/ under a self-describing name carrying its version range.
-    // The name IS the durable statistic: it travels atomically with the
-    // file (no manifest-file/datafile crash window), and open() rebuilds
-    // the in-memory manifest from names alone — no footer reads.
-    val scratch = dir.resolve(
-      s"segments.write-${java.util.UUID.randomUUID().toString.take(8)}")
-    writeSegments(
-      spark.createDataFrame(batch.map(_.toRow).asJava, EventSchema.schema)
-        .coalesce(1),
-      scratch)
-    val part = scala.util.Using.resource(Files.list(scratch))(
-      _.filter(_.toString.endsWith(".parquet")).findFirst().orElseThrow(() =>
-        new IllegalStateException(s"no parquet part written in $scratch")))
-    Files.createDirectories(segmentsDir)
+    // Stage the segment in a scratch dir, then move it into segments/
+    // under a self-describing name carrying its version range. The name IS
+    // the durable statistic: it travels atomically with the file (no
+    // manifest-file/datafile crash window), and open() rebuilds the
+    // in-memory manifest from names alone — no footer reads.
+    val scratch = Files.createDirectories(dir.resolve(
+      s"segments.write-${java.util.UUID.randomUUID().toString.take(8)}"))
+    val part = scratch.resolve("part.parquet")
+    ParquetLogBackend.writeSegment(batch, part)
+    if (!Files.exists(segmentsDir)) {
+      Files.createDirectories(segmentsDir)
+      ParquetLogBackend.fsyncDir(dir)
+    }
     val (v0, v1) = (batch.head.version, batch.last.version)
     val target = segmentsDir.resolve(ParquetLogBackend.segmentName(v0, v1))
     // ONE lock section moves the file in, registers it, and drops the tail
@@ -154,6 +160,9 @@ final class ParquetLogBackend private (
       tail.dropInPlace(batch.length)
       segmentMaxVersion = v1
     }
+    // the move must be durable before rotation cuts the batch's commit
+    // lines: otherwise a power loss can lose acknowledged commits
+    ParquetLogBackend.fsyncDir(segmentsDir)
     deleteRecursively(scratch)
     rotateCommitLog()
     // file-count hygiene: timer compaction writes one small file per
@@ -225,7 +234,8 @@ final class ParquetLogBackend private (
       deleteRecursively(old)
     }
 
-  /** The one segment layout, for both writes (compaction and coalescing):
+  /** The Spark write of [[coalesceSegments]], in the one segment layout
+    * ([[ParquetLogBackend.writeSegment]] writes the same for [[compact]]):
     * zstd, and Parquet pages of at most one read batch. Pages that small
     * give the column/offset index a page per ~read batch, so the version
     * predicate a paged scan pushes down skips every page outside its range.
@@ -295,38 +305,33 @@ final class ParquetLogBackend private (
             n
           }
       }
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(bounded, StandardCharsets.UTF_8))
       // Txn tags on lines being dropped (events fully in segments) must
       // outlive the line — condensed to one marker per queryId, keeping the
       // HIGHEST batchId (the only one replay detection compares against).
       // Bounded by the number of distinct streaming queries, not history.
       val droppedTxns = scala.collection.mutable.HashMap
-        .empty[String, (Long, Long, Long, Long)] // q -> (b, ts, vp, v)
-      var line = br.readLine()
-      while (line != null) {
-        if (line.nonEmpty) {
-          val root = ParquetLogBackend.mapper.readTree(line)
-          if (root.get("v").asLong() > segmentMaxVersion) {
-            tmpOut.write(line.getBytes(StandardCharsets.UTF_8))
+        .empty[String, ParquetLogBackend.Header]
+      val torn = ParquetLogBackend.foreachLine(bounded) { (line, len, _) =>
+        if (len > 0) {
+          val h = ParquetLogBackend.readHeader(line, len)
+          if (h.v > segmentMaxVersion) {
+            tmpOut.write(line, 0, len)
             tmpOut.write('\n')
-          } else {
-            val q = root.get("q")
-            if (q != null) {
-              val b = root.get("b").asLong()
-              droppedTxns.updateWith(q.asText()) {
-                case some @ Some((prev, _, _, _)) if prev >= b => some
-                case _ => Some((b, root.get("ts").asLong(),
-                  root.get("vp").asLong(), root.get("v").asLong()))
-              }
+          } else if (h.q != null)
+            droppedTxns.updateWith(h.q) {
+              case some @ Some(prev) if prev.b >= h.b => some
+              case _ => Some(h)
             }
-          }
         }
-        line = br.readLine()
       }
-      droppedTxns.foreach { case (q, (b, ts, vp, v)) =>
-        tmpOut.write(ParquetLogBackend.encodeTxnMarker(q, b, ts, vp, v)
-          .getBytes(StandardCharsets.UTF_8))
+      // len0 sits on a line boundary (persist writes whole lines under
+      // ioLock; open() cuts a torn final line)
+      if (torn > 0)
+        throw new IllegalStateException(s"commit log $commitLog ends mid-line")
+      droppedTxns.values.foreach { h =>
+        val m = ParquetLogBackend.encodeCommit(
+          h.ts, h.vp, h.v, Some(CommitTag(h.q, h.b)), Nil)
+        tmpOut.write(m.array(), m.arrayOffset() + m.position(), m.remaining())
       }
     }
     tmpOut.flush()
@@ -354,13 +359,8 @@ final class ParquetLogBackend private (
       channel.close()
       Files.move(tmp, commitLog,
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      // directory fsync so the rename itself is durable. Linux supports
-      // opening a directory for read+force; elsewhere it throws — degrade to
-      // best-effort rather than failing the rotation.
-      try scala.util.Using.resource(
-        java.nio.channels.FileChannel.open(dir, StandardOpenOption.READ))(
-        _.force(true))
-      catch { case _: java.io.IOException => () }
+      // directory fsync so the rename itself is durable
+      ParquetLogBackend.fsyncDir(dir)
       channel = java.nio.channels.FileChannel.open(
         commitLog,
         StandardOpenOption.CREATE,
@@ -440,24 +440,25 @@ final class ParquetLogBackend private (
       restore(segmentMaxVersion, row.getLong(1))
     }
     if (Files.exists(commitLog)) {
-      scala.util.Using.resource(Files.lines(commitLog))(_.iterator().asScala.foreach { line =>
-        if (line.nonEmpty) {
-          val root = ParquetLogBackend.mapper.readTree(line)
-          val events = ParquetLogBackend.decodeCommitEvents(root)
-            .filter(_.version > segmentMaxVersion)
-          if (events.nonEmpty) {
-            tail ++= events
-            restore(events.last.version, events.last.timestamp)
-          }
-          val q = root.get("q") // transactional tag (inline or marker line)
-          if (q != null) {
-            val vp = root.get("vp").asLong()
-            restoreTxn(q.asText(), root.get("b").asLong(),
-              AppendResult(vp, vp + 1, root.get("v").asLong(),
-                root.get("ts").asLong()))
-          }
+      ParquetLogBackend.replayCommits(commitLog) { (events, txn) =>
+        val fresh = events.filter(_.version > segmentMaxVersion)
+        if (fresh.nonEmpty) {
+          tail ++= fresh
+          restore(fresh.last.version, fresh.last.timestamp)
         }
-      })
+        txn.foreach(h =>
+          restoreTxn(h.q, h.b, AppendResult(h.vp, h.vp + 1, h.v, h.ts)))
+      }.foreach { goodEnd =>
+        // cut the torn line, so the next append starts on a line boundary
+        ParquetLogBackend.logger.warn(
+          s"dropping the torn final line of $commitLog " +
+            s"(${Files.size(commitLog) - goodEnd} bytes past the last complete line)")
+        scala.util.Using.resource(java.nio.channels.FileChannel.open(
+          commitLog, StandardOpenOption.WRITE)) { ch =>
+          ch.truncate(goodEnd)
+          ch.force(true)
+        }
+      }
       tail.lastOption.foreach { last => // open-time integrity of the tail entry
         val cs = EventOps.checksum(
           last.timestamp,
@@ -517,22 +518,10 @@ object ParquetLogBackend {
       throw new IllegalStateException(s"not an event log directory: $path")
     val commitLog = dir.resolve("commits.jsonl")
     val tail = ArrayBuffer.empty[StoredEvent]
-    if (Files.exists(commitLog)) {
-      // A live writer may be mid-append: a torn FINAL line is the normal
-      // concurrent-read artifact (the commit simply isn't part of this
-      // snapshot yet) and is dropped; a malformed line FOLLOWED by valid
-      // ones is real corruption and still throws.
-      val lines = scala.util.Using.resource(Files.lines(commitLog))(
-        _.iterator().asScala.filter(_.nonEmpty).toList)
-      lines.zipWithIndex.foreach { case (line, i) =>
-        try tail ++= decodeCommitEvents(mapper.readTree(line))
-        catch {
-          case _: com.fasterxml.jackson.core.JacksonException
-              if i == lines.length - 1 => ()
-          case _: NullPointerException if i == lines.length - 1 => ()
-        }
-      }
-    }
+    // a torn final line is a live writer mid-append: that commit is not
+    // part of this snapshot yet
+    if (Files.exists(commitLog))
+      replayCommits(commitLog)((events, _) => tail ++= events)
     // A coalesceSegments swap (segments -> segments.old, staging ->
     // segments) has a window where segments/ does not exist; segments.old
     // holds the COMPLETE pre-rewrite history then, so falling back to it
@@ -610,55 +599,213 @@ object ParquetLogBackend {
     b
   }
 
-  private def encodeCommit(
-      events: Seq[StoredEvent], tag: Option[CommitTag]): String = {
-    val root = mapper.createObjectNode()
-    root.put("ts", events.head.timestamp)
-    root.put("vp", events.head.versionPrevious)
-    root.put("v", events.last.version)
+  /** Header of a commit line: first/previous version, last version,
+    * timestamp, and the transactional tag (`q` null when untagged). */
+  private final case class Header(ts: Long, vp: Long, v: Long, q: String, b: Long)
+
+  /** One commit line as UTF-8 bytes, newline included, in one buffer: the
+    * header fields `ts`, `vp`, `v` (and the tag `q`, `b`) first, then
+    * `events`. A line with a tag and no events is the condensed record of
+    * a compacted-away transactional commit: the events live in segments,
+    * but the (queryId, batchId) → version-range fact must stay durable for
+    * replay detection. */
+  private def encodeCommit(ts: Long, vp: Long, v: Long,
+      tag: Option[CommitTag], events: Seq[StoredEvent]): java.nio.ByteBuffer = {
+    val out = new LineBuffer(64 + events.iterator
+      .map(e => 48 + (e.label.length + e.payload.length) * 5 / 4).sum)
+    val g = mapper.getFactory.createGenerator(out)
+    g.writeStartObject()
+    g.writeNumberField("ts", ts)
+    g.writeNumberField("vp", vp)
+    g.writeNumberField("v", v)
     // transactional tag (exactly-once streaming sinks): rides the SAME
     // fsync'd line as the data, so "committed" and "recorded as committed"
     // are one atomic durability event — no window where a crash could
     // replay an already-appended micro-batch
     tag.foreach { t =>
-      root.put("q", t.queryId)
-      root.put("b", t.batchId)
+      g.writeStringField("q", t.queryId)
+      g.writeNumberField("b", t.batchId)
     }
-    val arr = root.putArray("events")
+    g.writeArrayFieldStart("events")
     events.foreach { e =>
-      val n = arr.addObject()
-      n.put("l", e.label)
-      n.put("p", e.payload)
-      n.put("c", e.checksum)
+      g.writeStartObject()
+      g.writeStringField("l", e.label)
+      g.writeStringField("p", e.payload)
+      g.writeNumberField("c", e.checksum)
+      g.writeEndObject()
     }
-    mapper.writeValueAsString(root) + "\n"
+    g.writeEndArray()
+    g.writeEndObject()
+    g.writeRaw('\n')
+    g.close()
+    out.bytes
   }
 
-  /** Condensed record of a compacted-away transactional commit: the events
-    * now live in segments, but the (queryId, batchId) → version-range fact
-    * must stay durable for replay detection. */
-  private def encodeTxnMarker(
-      q: String, b: Long, ts: Long, vp: Long, v: Long): String = {
-    val root = mapper.createObjectNode()
-    root.put("ts", ts)
-    root.put("vp", vp)
-    root.put("v", v)
-    root.put("q", q)
-    root.put("b", b)
-    root.putArray("events")
-    mapper.writeValueAsString(root) + "\n"
+  /** A byte stream whose buffer is handed out without a copy. */
+  private final class LineBuffer(size: Int)
+      extends java.io.ByteArrayOutputStream(size) {
+    def bytes: java.nio.ByteBuffer = java.nio.ByteBuffer.wrap(buf, 0, count)
   }
 
-  private def decodeCommitEvents(
-      root: com.fasterxml.jackson.databind.JsonNode): Seq[StoredEvent] = {
+  /** The header of a commit line, read with a streaming parser that stops
+    * at `events` ([[encodeCommit]] writes the header first): the events
+    * are neither parsed nor copied. */
+  private def readHeader(line: Array[Byte], len: Int): Header = {
+    import com.fasterxml.jackson.core.JsonToken
+    scala.util.Using.resource(mapper.getFactory.createParser(line, 0, len)) { p =>
+      var (ts, vp, v, q, b) = (0L, 0L, -1L, null: String, 0L)
+      p.nextToken() // the line's object
+      while (p.nextToken() == JsonToken.FIELD_NAME && p.currentName != "events") {
+        val name = p.currentName
+        p.nextToken()
+        name match {
+          case "ts" => ts = p.getLongValue
+          case "vp" => vp = p.getLongValue
+          case "v" => v = p.getLongValue
+          case "q" => q = p.getText
+          case "b" => b = p.getLongValue
+          case _ => p.skipChildren()
+        }
+      }
+      if (v < 0) throw new IllegalStateException("commit line without a version")
+      Header(ts, vp, v, q, b)
+    }
+  }
+
+  /** Events and transactional header of one commit line. */
+  private def decodeCommit(
+      line: Array[Byte], len: Int): (Seq[StoredEvent], Option[Header]) = {
+    val root = mapper.readTree(line, 0, len)
     val ts = root.get("ts").asLong()
     var vp = root.get("vp").asLong()
-    root.get("events").elements().asScala.map { n =>
+    val events = root.get("events").elements().asScala.map { n =>
       val v = vp + 1
       val se = StoredEvent(
         v, vp, ts, n.get("l").asText(), n.get("p").asText(), n.get("c").asLong())
       vp = v
       se
     }.toList
+    val txn = Option(root.get("q")).map(q => Header(ts,
+      root.get("vp").asLong(), root.get("v").asLong(), q.asText(),
+      root.get("b").asLong()))
+    (events, txn)
   }
+
+  /** Replays the commit lines of `log` in order through `f`. A final line
+    * that is unterminated or unparseable is a torn write: its fsync never
+    * returned, so it was never acknowledged (to a reader racing the
+    * writer: not yet). It is left out, and the byte offset where it starts
+    * is returned. A malformed line followed by another is corruption and
+    * throws. */
+  private def replayCommits(log: Path)(
+      f: (Seq[StoredEvent], Option[Header]) => Unit): Option[Long] = {
+    var goodEnd = 0L
+    var bad: Option[(Long, Throwable)] = None
+    def failIfBad(): Unit = bad.foreach { case (at, e) =>
+      throw new IllegalStateException(
+        s"corrupted commit log $log: malformed line at byte $at", e)
+    }
+    val torn = scala.util.Using.resource(Files.newInputStream(log))(
+      foreachLine(_) { (line, len, end) =>
+        if (len > 0) {
+          failIfBad()
+          val parsed = try Some(decodeCommit(line, len))
+          catch {
+            case e @ (_: com.fasterxml.jackson.core.JacksonException |
+                _: NullPointerException) =>
+              bad = Some((end - len - 1, e))
+              None
+          }
+          parsed.foreach(f.tupled)
+        }
+        if (bad.isEmpty) goodEnd = end
+      })
+    if (torn > 0) failIfBad()
+    if (bad.nonEmpty || torn > 0) Some(goodEnd) else None
+  }
+
+  /** Calls `f(buf, len, end)` for each '\n'-terminated line of `in`: the
+    * line is `buf(0 until len)` without its newline, `end` the byte offset
+    * just past the newline. `buf` is reused across calls. Returns the count
+    * of bytes after the last newline (a torn final write). */
+  private def foreachLine(in: java.io.InputStream)(
+      f: (Array[Byte], Int, Long) => Unit): Int = {
+    val chunk = new Array[Byte](1 << 16)
+    var line = new Array[Byte](1 << 12)
+    var len = 0
+    var end = 0L
+    var n = in.read(chunk)
+    while (n >= 0) {
+      var i = 0
+      while (i < n) {
+        var j = i
+        while (j < n && chunk(j) != '\n') j += 1
+        if (len + j - i > line.length)
+          line = java.util.Arrays.copyOf(line,
+            math.max(line.length * 2, len + j - i))
+        System.arraycopy(chunk, i, line, len, j - i)
+        len += j - i
+        if (j < n) {
+          end += len + 1
+          f(line, len, end)
+          len = 0
+        }
+        i = j + 1
+      }
+      n = in.read(chunk)
+    }
+    len
+  }
+
+  /** Parquet schema of a segment: [[EventSchema.schema]], as Spark's
+    * reader and [[graft.sources.GraftSegmentReader]] read it. */
+  private val SegmentType = org.apache.parquet.schema.MessageTypeParser
+    .parseMessageType(
+      """message spark_schema {
+        |  required int64 version;
+        |  required int64 version_previous;
+        |  required int64 timestamp;
+        |  required binary label (STRING);
+        |  required binary payload (STRING);
+        |  required int64 checksum;
+        |}""".stripMargin)
+
+  /** Write `batch` as one segment file at `out` with parquet-hadoop, on
+    * the calling thread, and fsync it. The layout is the one
+    * [[ParquetLogBackend#writeSegments]] gives a Spark write: zstd, and
+    * Parquet pages of at most one read batch. */
+  private def writeSegment(batch: Seq[StoredEvent], out: Path): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.parquet.io.LocalOutputFile(out))
+      .withType(SegmentType)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD)
+      .withPageRowCountLimit(EventSchema.MaxReadBatchSize)
+      // no default resources: nothing a local write reads is in Hadoop's
+      // site files, and parsing them costs ~20 ms CPU per compaction
+      .withConf(new org.apache.hadoop.conf.Configuration(false))
+      .build()
+    try batch.foreach { e =>
+      val g = new SimpleGroup(SegmentType)
+      g.add("version", e.version)
+      g.add("version_previous", e.versionPrevious)
+      g.add("timestamp", e.timestamp)
+      g.add("label", e.label)
+      g.add("payload", e.payload)
+      g.add("checksum", e.checksum)
+      w.write(g)
+    } finally w.close()
+    scala.util.Using.resource(java.nio.channels.FileChannel.open(
+      out, StandardOpenOption.WRITE))(_.force(true))
+  }
+
+  /** fsync a directory, so the entries created or renamed in it are
+    * durable. Linux supports opening a directory for read+force; elsewhere
+    * it throws — degraded to best-effort rather than failing the caller. */
+  private def fsyncDir(d: Path): Unit =
+    try scala.util.Using.resource(
+      java.nio.channels.FileChannel.open(d, StandardOpenOption.READ))(
+      _.force(true))
+    catch { case _: java.io.IOException => () }
 }

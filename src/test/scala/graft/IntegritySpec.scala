@@ -149,6 +149,53 @@ class IntegritySpec extends AnyFunSuite {
     } finally reopened.close()
   }
 
+  test("parquet backend: a torn final commit line is dropped on open and cut from the file") {
+    val dir = Files.createTempDirectory("graftcor3").toString
+    val log = new EventLog(ParquetLogBackend.create(spark, dir,
+      compactThreshold = 1000, compactIntervalMs = 0))
+    (1 to 5).foreach(i => log.append(EventData(s"l$i", s"""{"i":$i}""")))
+    log.close()
+
+    // a crash mid-append: the 6th line's write reached the file only in part
+    val cl = Paths.get(dir, "commits.jsonl")
+    Files.writeString(cl, """{"ts":1,"vp":5,"v":6,"events":[{"l":"l6","p":""",
+      java.nio.file.StandardOpenOption.APPEND)
+    val reopened = new EventLog(ParquetLogBackend.open(spark, dir,
+      compactThreshold = 1000, compactIntervalMs = 0))
+    try {
+      assert(reopened.version == 5L)
+      assert(reopened.checkIntegrity().isEmpty)
+      assert(reopened.append(EventData("l6", """{"i":6}""")).version == 6L)
+    } finally reopened.close()
+
+    val again = new EventLog(ParquetLogBackend.open(spark, dir,
+      compactThreshold = 1000, compactIntervalMs = 0))
+    try {
+      assert(again.version == 6L)
+      val last = again.scan(6L).collect()
+      assert(last.length == 1)
+      assert(last.head.getAs[String]("payload") == """{"i":6}""")
+      assert(again.checkIntegrity().isEmpty)
+    } finally again.close()
+  }
+
+  test("parquet backend: a malformed commit line followed by another fails open") {
+    val dir = Files.createTempDirectory("graftcor4").toString
+    val log = new EventLog(ParquetLogBackend.create(spark, dir,
+      compactThreshold = 1000, compactIntervalMs = 0))
+    (1 to 3).foreach(i => log.append(EventData(s"l$i", s"""{"i":$i}""")))
+    log.close()
+
+    val cl = Paths.get(dir, "commits.jsonl")
+    val lines = Files.readAllLines(cl).asScala.toSeq
+    // the 2nd of 3 lines cut short: only a final line may be torn
+    Files.write(cl, Seq(lines(0), lines(1).take(20), lines(2))
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    val ex = intercept[IllegalStateException](
+      ParquetLogBackend.open(spark, dir, compactIntervalMs = 0))
+    assert(ex.getMessage.contains("malformed line"), ex.getMessage)
+  }
+
   test("unsupported proto version rejected on open") {
     val dir = Files.createTempDirectory("graftproto")
     Files.writeString(dir.resolve("meta.json"),

@@ -75,6 +75,43 @@ class SegmentCoalesceSpec extends AnyFunSuite {
     } finally log.close()
   }
 
+  test("compact() runs no Spark job") {
+    val dir = Files.createTempDirectory("graftseg").toString
+    val b = ParquetLogBackend.create(spark, dir,
+      compactThreshold = 100000, compactIntervalMs = 0)
+    val log = new EventLog(b)
+    val sc = spark.sparkContext
+    // jobs are told apart by the job group of the thread that ran them;
+    // the listener bus is asynchronous, so a marker job in another group
+    // flushes it: once its start is seen, every earlier job start was too
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      log.appendMulti((1 to 2500).map(i => EventData("e", s"""{"i":$i}""")))
+      sc.setJobGroup("compact-probe", "compact()")
+      b.compact()
+      sc.setJobGroup("compact-probe-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains("compact-probe-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains("compact-probe-end"), "marker job never seen")
+      assert(started.asScala.count(_ == "compact-probe") == 0)
+      assert(parquetFiles(dir) == 1)
+      assert(log.scan(1L).count() == 2500L)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      log.close()
+    }
+  }
+
   test("coalesceSegments shrinks file count, preserves every event") {
     val dir = Files.createTempDirectory("graftseg").toString
     val b = ParquetLogBackend.create(spark, dir, compactIntervalMs = 0)
