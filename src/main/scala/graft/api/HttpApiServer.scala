@@ -345,10 +345,9 @@ final class HttpApiServer(
     val skipFirst = params.contains("skip_first")
     try {
       if (headOnly) {
-        // HEAD needs only the status: run the same bounds check log.scan
-        // performs (an O(1) sequencer read) without building the scan
-        // DataFrame — snapshotRange's file-index planning is real driver
-        // work on a many-segment log, all discarded for a probe.
+        // HEAD needs only the status: run the same bounds check log.page
+        // performs (an O(1) sequencer read) without reading the page —
+        // segment reads that would all be discarded for a probe.
         val latest = log.version
         if (latest == 0L || version < 1L || version > latest)
           throw new Errors.ErrInvalidVersion
@@ -358,16 +357,14 @@ final class HttpApiServer(
         out.flush()
         return
       }
-      // stream rows straight into a chunked response (no driver-side
-      // materialization of the batch — the reference's streaming
-      // serialization, serve.go:215-269). The scan itself must run before
-      // headers are committed so ErrInvalidVersion can still map to a 400.
-      val scan = log.scan(version, reverse,
+      // The page is read on this thread, with no Spark job, before headers
+      // are committed, so ErrInvalidVersion can still map to a 400. A
+      // bounded page is read whole; an unbounded one (batch cap 0) streams
+      // in read-batch windows, so the rows go into the chunked response
+      // (the reference's streaming serialization, serve.go:215-269) one
+      // window at a time.
+      val it = log.page(version, reverse,
         if (limit > 0) Some(limit) else None, skipFirst)
-      val it = scan
-        .select("version", "version_previous", "version_next",
-          "timestamp", "label", "payload")
-        .toLocalIterator()
       out.write(("HTTP/1.1 200 OK\r\nContent-Type: application/json\r\n" +
         "Transfer-Encoding: chunked\r\nConnection: keep-alive\r\n\r\n")
         .getBytes(StandardCharsets.ISO_8859_1))
@@ -384,15 +381,14 @@ final class HttpApiServer(
         }
         chunk("[")
         var first = true
-        while (it.hasNext) {
-          val r = it.next()
+        it.foreach { e =>
           val sep = if (first) "" else ","
           first = false
           // jsonStr is a no-op for ingest-validated labels (their charset
           // has no quotes/backslashes) but keeps the response well-formed
           // if the log dir was written or damaged by other tooling
           chunk(
-            s"""$sep{"time":"${time(r.getLong(3))}","version":"${hex(r.getLong(0))}","version-previous":"${hex(r.getLong(1))}","version-next":"${hex(r.getLong(2))}","label":${jsonStr(r.getString(4))},"payload":${r.getString(5)}}""")
+            s"""$sep{"time":"${time(e.timestamp)}","version":"${hex(e.version)}","version-previous":"${hex(e.versionPrevious)}","version-next":"${hex(e.versionNext)}","label":${jsonStr(e.label)},"payload":${e.payloadJson}}""")
         }
         chunk("]")
         out.write("0\r\n\r\n".getBytes(StandardCharsets.ISO_8859_1))

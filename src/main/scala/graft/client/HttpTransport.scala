@@ -228,7 +228,10 @@ private[client] final class HttpTransport(
   }
 
   private def readChunked(in: InputStream): Array[Byte] = {
-    val buf = new java.io.ByteArrayOutputStream(1024)
+    // chunks are kept as read and joined once: growing one buffer would
+    // copy a page-sized body several times over
+    val chunks = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    var total = 0
     var done = false
     while (!done) {
       val sizeLine = readLine(in)
@@ -237,7 +240,8 @@ private[client] final class HttpTransport(
       else {
         val b = in.readNBytes(size)
         if (b.length < size) throw new IOException("truncated chunk")
-        buf.write(b)
+        chunks += b
+        total += size
         if (in.read() != '\r' || in.read() != '\n')
           throw new IOException("missing chunk CRLF")
       }
@@ -245,6 +249,9 @@ private[client] final class HttpTransport(
     // trailer section: zero or more trailer lines, then the blank line
     var t = readLine(in)
     while (t.nonEmpty) t = readLine(in)
-    buf.toByteArray
+    val body = new Array[Byte](total)
+    var at = 0
+    chunks.foreach { c => System.arraycopy(c, 0, body, at, c.length); at += c.length }
+    body
   }
 }

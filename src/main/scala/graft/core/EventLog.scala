@@ -2,7 +2,7 @@ package graft.core
 
 import graft.exprs.EventOps
 import graft.exprs.functions._
-import graft.storage.EventLogBackend
+import graft.storage.{EventLogBackend, StoredEvent}
 import graft.streaming.{VersionHub, VersionSubscription}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -11,14 +11,17 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The engine facade ≙ reference `EventLog` (eventlog/eventlog.go:106-282):
   * validates + canonicalizes on the way in, delegates commits to the
   * backend's sequencer, publishes the new version to subscribers, and
-  * exposes scans as DataFrames.
+  * serves reads two ways: [[page]] reads a page as driver rows on the
+  * calling thread (what the HTTP API serves), and [[scan]] returns the same
+  * rows as a DataFrame for analytics and Scala callers.
   *
   * Versions are dense (see [[EventSchema]]), so `version_next` is
-  * arithmetic (`v+1`, 0 at the head; no window), and a paged scan knows its
-  * exact version range up front. `scan` still sorts (`orderBy` + `limit`),
-  * but that range is both the backend's planning bound and a pushed parquet
-  * predicate, so a page's sort sees only the page's rows plus the
-  * file-granular overspill of row groups that straddle the range.
+  * arithmetic (`v+1`, 0 at the head; no window), and a paged read knows its
+  * exact version range up front ([[pageRange]], shared by both). [[page]]
+  * asks the backend for exactly that range; `scan` still sorts (`orderBy`
+  * + `limit`), but the range is both the backend's planning bound and a
+  * pushed parquet predicate, so a page's sort sees only the page's rows
+  * plus the file-granular overspill of row groups that straddle the range.
   */
 final class EventLog(backend: EventLogBackend) extends AutoCloseable {
   private val hub = new VersionHub
@@ -105,17 +108,84 @@ final class EventLog(backend: EventLogBackend) extends AutoCloseable {
 
   // ---- reads (reference eventlog.go:263-265, file.go:207-306) ----
 
-  /** Scan from `version` (inclusive). Bounds-checked against the live log
-    * like the reference (file.go:221-228): out-of-range or empty-log scans
-    * throw ErrInvalidVersion rather than returning empty.
+  /** Versions a read from `version` spans: with `limit = Some(n)`,
+    * `[max(1, v-n-skip+1), v]` reverse and `[v, v+n+skip-1]` forward
+    * (skip = 1 with `skipFirst`); without, `[1, v]` and `[v, ∞)`. The
+    * reference's seek-and-stop (file.go:207-306): a page costs O(page), not
+    * O(log). */
+  private def pageRange(
+      version: Long,
+      reverse: Boolean,
+      limit: Option[Int],
+      skipFirst: Boolean): (Long, Long) = {
+    val span = limit.map(_.toLong + (if (skipFirst) 1L else 0L))
+    if (reverse) (span.fold(1L)(k => math.max(1L, version - k + 1L)), version)
+    else (version, span.fold(Long.MaxValue)(k =>
+      if (version > Long.MaxValue - k) Long.MaxValue else version + k - 1L))
+  }
+
+  /** Bounds check against the live log like the reference
+    * (file.go:221-228): out-of-range or empty-log reads throw
+    * ErrInvalidVersion rather than returning empty. */
+  private def checkVersion(version: Long, latest: Long): Unit =
+    if (latest == 0L || version < 1L || version > latest)
+      throw new Errors.ErrInvalidVersion
+
+  /** The rows of `scan(version, reverse, limit, skipFirst)`, read on the
+    * calling thread through [[EventLogBackend.readRange]], with no Spark job
+    * on either product backend. Throws ErrInvalidVersion before returning,
+    * so a caller can still answer with an error.
+    *
+    * A bounded page (`limit = Some(n)`) is read whole before this returns.
+    * An unbounded read streams: the iterator reads the log as of the call
+    * in windows of [[EventSchema.MaxReadBatchSize]] versions (high to low
+    * when `reverse`), so it holds one window at a time. */
+  def page(
+      version: Long,
+      reverse: Boolean = false,
+      limit: Option[Int] = None,
+      skipFirst: Boolean = false): Iterator[Event] = {
+    val (lo, hi) = pageRange(version, reverse, limit, skipFirst)
+    val w = EventSchema.MaxReadBatchSize.toLong
+    // the window of the first read: the whole page when bounded
+    val (lo0, hi0) =
+      if (limit.isDefined) (lo, hi)
+      else if (reverse) (math.max(lo, hi - w + 1L), hi)
+      else (lo, if (lo > Long.MaxValue - w) Long.MaxValue else lo + w - 1L)
+    // read BEFORE latest, as in scan: the sequencer publishes `latest` only
+    // after the commit's rows are readable, so every row read is <= latest
+    val first = backend.readRange(lo0, hi0)
+    val latest = backend.version
+    checkVersion(version, latest)
+    val windows: Iterator[Seq[StoredEvent]] =
+      if (limit.isDefined) Iterator.single(first)
+      else if (reverse)
+        Iterator.single(first) ++ Iterator.iterate(lo0 - 1L)(_ - w)
+          .takeWhile(_ >= lo)
+          .map(top => backend.readRange(math.max(lo, top - w + 1L), top))
+      else
+        Iterator.single(first) ++ Iterator.iterate(hi0 + 1L)(_ + w)
+          .takeWhile(b => b > hi0 && b <= latest)
+          .map(b => backend.readRange(b, math.min(latest, b + w - 1L)))
+    val rows = windows.flatMap(ws => if (reverse) ws.reverseIterator else ws)
+      .map(e => Event(e.version, e.versionPrevious,
+        if (e.version < latest) e.version + 1L else 0L,
+        e.timestamp, e.label, e.payload))
+    val cursored = if (skipFirst) rows.drop(1) else rows
+    limit.fold(cursored)(cursored.take)
+  }
+
+  /** Scan from `version` (inclusive) as a DataFrame, for analytics and
+    * Scala callers; the HTTP API serves the same rows through [[page]].
+    * Bounds-checked against the live log like the reference
+    * (file.go:221-228): out-of-range or empty-log scans throw
+    * ErrInvalidVersion rather than returning empty.
     *
     * Output adds `version_next` (0 at the log head) — derived, never stored,
     * matching read_event.go:17.
     *
-    * With `limit = Some(n)` the page is `[max(1, v-n-skip+1), v]` reverse
-    * and `[v, v+n+skip-1]` forward (skip = 1 with `skipFirst`), read with
-    * both bounds as its row predicate — the reference's seek-and-stop
-    * (file.go:207-306), so a page costs O(page), not O(log).
+    * With `limit = Some(n)` the scan reads [[pageRange]] with both bounds
+    * as its row predicate.
     */
   def scan(
       version: Long,
@@ -130,14 +200,10 @@ final class EventLog(backend: EventLogBackend) extends AutoCloseable {
     // files at plan time (superset contract — the exact filters below
     // still apply). A forward page keeps the open upper bound here and
     // gets its upper bound from the pushed predicate alone.
-    val span = limit.map(_.toLong + (if (skipFirst) 1L else 0L))
-    val (lo, hi) =
-      if (reverse) (span.fold(1L)(k => math.max(1L, version - k + 1L)), version)
-      else (version, span.fold(Long.MaxValue)(k => version + k - 1L))
+    val (lo, hi) = pageRange(version, reverse, limit, skipFirst)
     val snap = backend.snapshotRange(lo, if (reverse) hi else Long.MaxValue)
     val latest = backend.version
-    if (latest == 0L || version < 1L || version > latest)
-      throw new Errors.ErrInvalidVersion
+    checkVersion(version, latest)
     val base = snap
       .withColumn("version_next",
         when(col("version") < latest, col("version") + 1L).otherwise(0L))

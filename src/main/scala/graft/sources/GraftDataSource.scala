@@ -646,60 +646,21 @@ final class GraftColumnarTailReader(
   override def close(): Unit = ()
 }
 
-/** Reads one segment file with parquet-hadoop: requested projection =
-  * required columns (+ `version` when a bound needs row-filtering), and a
-  * stats filter on `version` so non-overlapping row groups are skipped
-  * without decoding. Row-level exactness matters for the STREAMING path —
-  * a micro-batch must contain exactly its offset range, there is no Spark
-  * residual filter there. */
+/** Reads one segment file through [[ParquetLogBackend.SegmentRows]], the
+  * one direct segment reader: projected to the required columns, with the
+  * version range pushed down so non-overlapping row groups and pages are
+  * skipped without decoding. Row-level exactness matters for the STREAMING
+  * path — a micro-batch must contain exactly its offset range, there is no
+  * Spark residual filter there. */
 final class GraftSegmentReader(
     file: String, lo: Long, hi: Long, required: StructType)
     extends PartitionReader[InternalRow] {
-  import org.apache.parquet.filter2.compat.FilterCompat
-  import org.apache.parquet.filter2.predicate.FilterApi
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.api.ReadSupport
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-
-  private val bounded = lo > 1L || hi < Long.MaxValue
-  // the reader-internal schema: required columns, plus version for the
-  // range check when it was pruned away
-  private val readFields =
-    if (!bounded || required.fieldNames.contains("version")) required
-    else StructType(StructField("version", LongType, nullable = false) +:
-      required.fields)
-
-  private val reader: ParquetReader[org.apache.parquet.example.data.Group] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projectionMessage)
-    var b = ParquetReader
-      .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(file))
-      .withConf(conf)
-    if (bounded) {
-      val c = FilterApi.longColumn("version")
-      b = b.withFilter(FilterCompat.get(FilterApi.and(
-        FilterApi.gtEq(c, java.lang.Long.valueOf(lo)),
-        FilterApi.ltEq(c, java.lang.Long.valueOf(hi)))))
-    }
-    b.build()
-  }
-
-  private def projectionMessage: String =
-    readFields.fields.map { f =>
-      f.dataType match {
-        case LongType => s"  required int64 ${f.name};"
-        case _ => s"  required binary ${f.name} (UTF8);"
-      }
-    }.mkString("message event {\n", "\n", "\n}")
-
+  private val rows = new ParquetLogBackend.SegmentRows(
+    file, lo, hi, required.fieldNames.toSeq)
   private var row: InternalRow = _
 
   override def next(): Boolean = {
-    var g = reader.read()
-    // stats filter is row-group/page granular; enforce the bound per row
-    while (g != null && bounded && {
-      val v = g.getLong("version", 0); v < lo || v > hi
-    }) g = reader.read()
+    val g = rows.next()
     if (g == null) { row = null; false }
     else {
       val values = new Array[Any](required.length)
@@ -717,7 +678,7 @@ final class GraftSegmentReader(
     }
   }
   override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
+  override def close(): Unit = rows.close()
 }
 
 /** Tail events travel IN the partition (they only exist in the driver-read

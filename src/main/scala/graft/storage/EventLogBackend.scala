@@ -2,6 +2,7 @@ package graft.storage
 
 import graft.core._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Storage backend contract ≙ the reference's `EventLogger` interface
   * (/root/reference/eventlog/eventlog.go:41-104), re-expressed around a
@@ -65,6 +66,18 @@ trait EventLogBackend extends AutoCloseable {
     * [[ParquetLogBackend]] tail) are sliced to the range exactly. The
     * default is the full snapshot. */
   def snapshotRange(minVersion: Long, maxVersion: Long): DataFrame = snapshot()
+
+  /** The committed events with version in [lo, hi], ascending, as driver
+    * rows: what one HTTP page or one window of an unbounded HTTP scan reads.
+    * Both product backends read on the calling thread with no Spark job
+    * ([[InMemoryBackend]] slices its store, [[ParquetLogBackend]] slices its
+    * tail and reads the 1-2 overlapping segments with parquet-hadoop). The
+    * default collects [[snapshotRange]] through a Spark job; it is there for
+    * decorators that override only `snapshotRange`. */
+  def readRange(lo: Long, hi: Long): Seq[StoredEvent] =
+    if (hi < lo) Nil
+    else snapshotRange(lo, hi).filter(col("version").between(lo, hi))
+      .orderBy(col("version")).collect().toSeq.map(StoredEvent.fromRow)
 
   /** Payload byte-size limit enforced on append. */
   def payloadLimit: Int

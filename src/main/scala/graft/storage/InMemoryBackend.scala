@@ -6,8 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable.ArrayBuffer
 
 /** Volatile in-memory backend ≙ reference eventlog/inmem (inmem.go:33-50).
-  * Dev/test scale: the whole log lives on the driver; `snapshotRange` hands
-  * the requested slice of it to Spark via createDataFrame. */
+  * Dev/test scale: the whole log lives on the driver; `readRange` copies the
+  * requested slice of it, and `snapshotRange` hands that slice to Spark via
+  * createDataFrame. */
 final class InMemoryBackend(
     spark: SparkSession,
     override val metadata: Map[String, String] = Map.empty,
@@ -26,13 +27,14 @@ final class InMemoryBackend(
 
   override def snapshot(): DataFrame = snapshotRange(1L, Long.MaxValue)
 
-  /** Exactly the events in [minVersion, maxVersion]: the store is dense
-    * from version 1, so a page copies only its own rows. */
-  override def snapshotRange(minVersion: Long, maxVersion: Long): DataFrame = {
-    // immutable copy = snapshot isolation
-    StoredEvent.frame(spark,
-      store.synchronized(StoredEvent.slice(store, minVersion, maxVersion)))
-  }
+  /** Exactly the events in [lo, hi]: the store is dense from version 1, so
+    * a page copies only its own rows (an immutable copy = snapshot
+    * isolation). */
+  override def readRange(lo: Long, hi: Long): Seq[StoredEvent] =
+    store.synchronized(StoredEvent.slice(store, lo, hi))
+
+  override def snapshotRange(minVersion: Long, maxVersion: Long): DataFrame =
+    StoredEvent.frame(spark, readRange(minVersion, maxVersion))
 
   override def close(): Unit = store.synchronized(store.clear())
 }

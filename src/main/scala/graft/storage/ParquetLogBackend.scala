@@ -3,6 +3,7 @@ package graft.storage
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.core._
 import graft.exprs.EventOps
+import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max => smax}
 import org.apache.spark.unsafe.types.UTF8String
@@ -399,6 +400,35 @@ final class ParquetLogBackend private (
     } else tailDf
   }
 
+  /** The events in [lo, hi] on the calling thread, with no Spark job. Tail
+    * slice, watermark and overlapping files are captured in one ioLock
+    * section (the same atomicity [[snapshotRange]] relies on); the 1-2
+    * segments a page overlaps are then read outside the lock with
+    * parquet-hadoop, the range pushed down so the column and offset indexes
+    * skip every Parquet page outside it. */
+  override def readRange(lo: Long, hi: Long): Seq[StoredEvent] = {
+    val (t, watermark, files) = ioLock.synchronized(
+      (StoredEvent.slice(tail, lo, hi), segmentMaxVersion,
+        manifest.filter { case (_, v0, v1) => v1 >= lo && v0 <= hi }.toList))
+    val top = math.min(hi, watermark)
+    val out = ArrayBuffer.empty[StoredEvent]
+    files.sortBy(_._2).foreach { case (f, v0, v1) =>
+      // a bound that does not cut into the file reads it unfiltered
+      val rows = new ParquetLogBackend.SegmentRows(f,
+        if (lo > v0) lo else 1L, if (top < v1) top else Long.MaxValue,
+        EventSchema.schema.fieldNames.toSeq)
+      try {
+        var g = rows.next()
+        while (g != null) {
+          out += ParquetLogBackend.storedEvent(g)
+          g = rows.next()
+        }
+      } finally rows.close()
+    }
+    out ++= t
+    out.toSeq
+  }
+
   override def close(): Unit = {
     closed = true
     compactTimer.foreach(_.shutdownNow())
@@ -432,12 +462,10 @@ final class ParquetLogBackend private (
     if (manifest.nonEmpty) {
       segmentMaxVersion = manifest.map(_._3).max
       // the recovery timestamp lives at the max version; timestamps are
-      // monotone in version, so reading ONLY the file holding it suffices —
-      // open cost is one small file, not a full-history scan
-      val lastFile = manifest.maxBy(_._3)._1
-      val row = spark.read.schema(EventSchema.schema).parquet(lastFile)
-        .agg(smax("version"), smax("timestamp")).head()
-      restore(segmentMaxVersion, row.getLong(1))
+      // monotone in version, so the footer of ONLY the file holding it
+      // suffices — open cost is one footer read, not a Spark job
+      restore(segmentMaxVersion,
+        ParquetLogBackend.maxTimestamp(manifest.maxBy(_._3)._1))
     }
     if (Files.exists(commitLog)) {
       ParquetLogBackend.replayCommits(commitLog) { (events, txn) =>
@@ -770,6 +798,115 @@ object ParquetLogBackend {
         |  required int64 checksum;
         |}""".stripMargin)
 
+  /** Hadoop configuration of the direct segment reads and writes, without
+    * default resources: nothing a local segment read or write uses is in
+    * Hadoop's site files, and parsing them costs ~15-20 ms CPU each time a
+    * file is opened. */
+  private def localConf(): org.apache.hadoop.conf.Configuration =
+    new org.apache.hadoop.conf.Configuration(false)
+
+  /** [[localConf]] for a direct segment read. Read buffers are capped
+    * below G1's humongous threshold (half a region): parquet's 8 MiB default
+    * makes every page read allocate its column bytes, twice over through
+    * LocalInputFile, as humongous objects that only a GC frees. */
+  private def readConf(): org.apache.hadoop.conf.Configuration = {
+    val conf = localConf()
+    conf.setInt("parquet.read.allocation.size", 256 << 10)
+    conf
+  }
+
+  /** Rows of one local segment file with version in [lo, hi], read with
+    * parquet-hadoop on the calling thread and projected to `columns` (plus
+    * `version` when the range is bounded, to check it). A bounded range is
+    * pushed down as a filter, so row-group statistics and the column and
+    * offset indexes skip what lies outside it; pages straddle the range, so
+    * rows are still checked one by one. `lo <= 1 && hi == Long.MaxValue`
+    * reads the whole file unfiltered. The projection takes its column types
+    * from the file itself: [[writeSegment]] writes required columns, a Spark
+    * write (coalesceSegments) optional ones. */
+  private[graft] final class SegmentRows(
+      file: String, lo: Long, hi: Long, columns: Seq[String])
+      extends AutoCloseable {
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+    import org.apache.parquet.schema.MessageType
+
+    private val bounded = lo > 1L || hi < Long.MaxValue
+    private val readColumns =
+      if (bounded && !columns.contains("version")) "version" +: columns
+      else columns
+
+    private val reader = {
+      val support = new ReadSupport[Group] {
+        override def init(ctx: InitContext): ReadSupport.ReadContext = {
+          val file = ctx.getFileSchema
+          new ReadSupport.ReadContext(new MessageType(file.getName,
+            readColumns.map(c => file.getType(file.getFieldIndex(c))): _*))
+        }
+        override def prepareForRead(
+            conf: org.apache.hadoop.conf.Configuration,
+            meta: java.util.Map[String, String],
+            fileSchema: MessageType,
+            rc: ReadSupport.ReadContext) =
+          new org.apache.parquet.example.data.simple.convert
+            .GroupRecordConverter(rc.getRequestedSchema)
+      }
+      val b = new org.apache.parquet.hadoop.ParquetReader.Builder[Group](
+          new org.apache.parquet.io.LocalInputFile(Paths.get(file)),
+          new org.apache.parquet.conf.HadoopParquetConfiguration(readConf())) {
+        override protected def getReadSupport: ReadSupport[Group] = support
+      }
+      if (bounded) {
+        val c = FilterApi.longColumn("version")
+        b.withFilter(FilterCompat.get(FilterApi.and(
+          FilterApi.gtEq(c, java.lang.Long.valueOf(lo)),
+          FilterApi.ltEq(c, java.lang.Long.valueOf(hi)))))
+      }
+      b.build()
+    }
+
+    /** The next row in range; null past the last. */
+    def next(): Group = {
+      var g = reader.read()
+      while (g != null && bounded && {
+        val v = g.getLong("version", 0); v < lo || v > hi
+      }) g = reader.read()
+      g
+    }
+
+    override def close(): Unit = reader.close()
+  }
+
+  /** A full-width row of [[SegmentRows]]. */
+  private def storedEvent(g: Group): StoredEvent =
+    StoredEvent(g.getLong("version", 0), g.getLong("version_previous", 0),
+      g.getLong("timestamp", 0), g.getString("label", 0),
+      g.getString("payload", 0), g.getLong("checksum", 0))
+
+  /** The largest `timestamp` in a segment, from the column statistics of
+    * its footer (one footer read, no data page decoded). Both segment
+    * writers record them; a segment without them was not written here and
+    * fails the open rather than restoring a guessed timestamp. */
+  private def maxTimestamp(file: String): Long = {
+    val footer = scala.util.Using.resource(
+      org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(Paths.get(file)),
+        org.apache.parquet.HadoopReadOptions.builder(readConf()).build()))(
+      _.getFooter)
+    val maxes = footer.getBlocks.asScala.map { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == "timestamp")
+        .map(_.getStatistics)
+        .filter(st => st != null && !st.isEmpty && st.hasNonNullValue)
+        .map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue)
+        .getOrElse(throw new IllegalStateException(
+          s"segment $file has no timestamp statistics"))
+    }
+    if (maxes.isEmpty)
+      throw new IllegalStateException(s"segment $file has no row groups")
+    maxes.max
+  }
+
   /** Write `batch` as one segment file at `out` with parquet-hadoop, on
     * the calling thread, and fsync it. The layout is the one
     * [[ParquetLogBackend#writeSegments]] gives a Spark write: zstd, and
@@ -782,9 +919,7 @@ object ParquetLogBackend {
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD)
       .withPageRowCountLimit(EventSchema.MaxReadBatchSize)
-      // no default resources: nothing a local write reads is in Hadoop's
-      // site files, and parsing them costs ~20 ms CPU per compaction
-      .withConf(new org.apache.hadoop.conf.Configuration(false))
+      .withConf(localConf())
       .build()
     try batch.foreach { e =>
       val g = new SimpleGroup(SegmentType)

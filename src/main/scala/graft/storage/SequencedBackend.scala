@@ -20,6 +20,11 @@ final case class StoredEvent(
 }
 
 object StoredEvent {
+  /** A row of [[EventSchema.schema]]. */
+  def fromRow(r: Row): StoredEvent =
+    StoredEvent(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3),
+      r.getString(4), r.getLong(5))
+
   /** The events of `run` with version in [minVersion, maxVersion]. `run`
     * must be dense and ascending (what the sequencer appends), so the slice
     * is index arithmetic off its first version, not a filter. */
