@@ -1,11 +1,13 @@
 package graft.client
 
+import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.api.MsgCodec
 import graft.core.{Errors, EventData}
 
 import java.net.URI
 import java.net.http.HttpClient
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 
 /** HTTP client library ≙ reference client package (client/client.go +
@@ -35,10 +37,10 @@ final class EventLogClient(baseUrl: String) extends AutoCloseable {
       time: String, version: String, versionPrevious: String,
       versionNext: String, label: String, payloadJson: String)
 
-  private def get(path: String): (Int, String) =
+  private def get(path: String): (Int, Array[Byte]) =
     transport.request("GET", path)
 
-  private def fail(body: String): Nothing = body match {
+  private def fail(body: Array[Byte]): Nothing = new String(body, UTF_8) match {
     case "ErrMismatchingVersions" => throw new Errors.ErrMismatchingVersions
     case "ErrInvalidVersion" => throw new Errors.ErrInvalidVersion
     case "ErrMalformedVersion" => throw new Errors.ErrMalformedVersion
@@ -96,7 +98,7 @@ final class EventLogClient(baseUrl: String) extends AutoCloseable {
     n.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
   }
 
-  private def ok(r: (Int, String)): String =
+  private def ok(r: (Int, Array[Byte])): Array[Byte] =
     if (r._1 == 200) r._2 else fail(r._2)
 
   private def scanPage(version: String, n: Int, reverse: Boolean,
@@ -107,12 +109,36 @@ final class EventLogClient(baseUrl: String) extends AutoCloseable {
       if (skipFirst) Some("skip_first") else None).flatten
     val q = if (params.isEmpty) "" else params.mkString("?", "&", "")
     val body = ok(get(s"/log/$version$q"))
-    mapper.readTree(body).elements().asScala.map { e =>
-      ClientEvent(
-        e.get("time").asText(), e.get("version").asText(),
-        e.get("version-previous").asText(), e.get("version-next").asText(),
-        e.get("label").asText(), e.get("payload").toString)
-    }.toList
+    // streamed over the response bytes: each payload is the raw byte span
+    // of its value, so the client hands back the text the log stores
+    // (a parsed tree would re-serialize it: 1.50 -> 1.5, \u00e9 -> é)
+    scala.util.Using.resource(mapper.getFactory.createParser(body)) { p =>
+      val out = List.newBuilder[ClientEvent]
+      // equal field values share one String per page: an event's
+      // version-previous is its predecessor's version, and labels repeat
+      val shared = scala.collection.mutable.HashMap.empty[String, String]
+      p.nextToken() // the page's array
+      while (p.nextToken() == JsonToken.START_OBJECT) {
+        val f = scala.collection.mutable.HashMap.empty[String, String]
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val name = p.currentName
+          val t = p.nextToken()
+          if (name == "payload") {
+            val start = p.currentTokenLocation().getByteOffset.toInt
+            if (t.isStructStart) p.skipChildren() else p.finishToken()
+            val end = p.currentLocation().getByteOffset.toInt
+            f(name) = new String(body, start, end - start, UTF_8)
+          } else if (t.isStructStart) p.skipChildren()
+          else {
+            val s = p.getText
+            f(name) = shared.getOrElseUpdate(s, s)
+          }
+        }
+        out += ClientEvent(f("time"), f("version"), f("version-previous"),
+          f("version-next"), f("label"), f("payload"))
+      }
+      out.result()
+    }
   }
 
   /** Paginated scan ≙ client/http.go:342-429: batches of `batchSize`, resume

@@ -111,7 +111,7 @@ private[client] final class HttpTransport(
   private final class SendFailed(val cause: IOException)
     extends Exception(cause)
 
-  /** One request; returns (status, body). Thread-safe: each call owns a
+  /** One request; returns (status, body bytes). Thread-safe: each call owns a
     * pooled connection for its duration.
     *
     * Retry policy (the double-apply guard): a failure on a reused
@@ -122,13 +122,13 @@ private[client] final class HttpTransport(
     * RESPONSE phase propagates instead: the server may have applied it,
     * and a blind resend could append twice. */
   def request(method: String, pathQuery: String,
-      body: Array[Byte] = null): (Int, String) = {
+      body: Array[Byte] = null): (Int, Array[Byte]) = {
     val (conn, reused) = borrow()
     try {
-      val (code, bodyStr, keepAlive) = roundTrip(conn, method, pathQuery, body)
+      val (code, resp, keepAlive) = roundTrip(conn, method, pathQuery, body)
       if (keepAlive) repool(conn)
       else conn.sock.close()
-      (code, bodyStr)
+      (code, resp)
     } catch {
       case e @ (_: SendFailed | _: IOException) =>
         try conn.sock.close() catch { case _: Exception => () }
@@ -140,11 +140,11 @@ private[client] final class HttpTransport(
         if (!retriable) throw ioe
         val fresh = connect()
         try {
-          val (code, bodyStr, keepAlive) =
+          val (code, resp, keepAlive) =
             roundTrip(fresh, method, pathQuery, body)
           if (keepAlive) repool(fresh)
           else fresh.sock.close()
-          (code, bodyStr)
+          (code, resp)
         } catch {
           case sf: SendFailed =>
             try fresh.sock.close() catch { case _: Exception => () }
@@ -163,7 +163,7 @@ private[client] final class HttpTransport(
 
   /** (status, body, connection-reusable). */
   private def roundTrip(conn: Conn, method: String, pathQuery: String,
-      body: Array[Byte]): (Int, String, Boolean) = {
+      body: Array[Byte]): (Int, Array[Byte], Boolean) = {
     val out = conn.out
     val head = new java.lang.StringBuilder(128)
       .append(method).append(' ').append(pathPrefix).append(pathQuery)
@@ -192,7 +192,7 @@ private[client] final class HttpTransport(
     sb.toString
   }
 
-  private def readResponse(in: InputStream): (Int, String, Boolean) = {
+  private def readResponse(in: InputStream): (Int, Array[Byte], Boolean) = {
     val status = readLine(in)
     val sp = status.indexOf(' ')
     val code = status.substring(sp + 1, sp + 4).toInt
@@ -224,7 +224,7 @@ private[client] final class HttpTransport(
       } else if (contentLength == 0 || bodyless) Array.emptyByteArray
       else if (connClose) in.readAllBytes() // EOF-delimited (HTTP/1.0 style)
       else Array.emptyByteArray // keep-alive with no framing: no body
-    (code, new String(body, StandardCharsets.UTF_8), !connClose)
+    (code, body, !connClose)
   }
 
   private def readChunked(in: InputStream): Array[Byte] = {

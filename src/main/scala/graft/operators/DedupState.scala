@@ -753,7 +753,7 @@ object DedupState {
     val n = staged.count()
     // the staged full card was scratch (its flag projection lives on as
     // card/; its evidence as rows/) — not a delta artifact
-    graft.storage.ParquetLogBackend.deleteRecursively(staging.resolve("vf"))
+    graft.util.Publish.deleteRecursively(staging.resolve("vf"))
 
     val deltaName = DeltaManifest.promote(staging)
     DeltaManifest.commit(dir, Magic, payloadOf(h.bloomBits, kind),

@@ -1,12 +1,14 @@
 package graft.operators
 
+import graft.util.Publish
+
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** The shared manifest discipline for log-structured delta stores
   * ([[DedupState]], [[DecontamRegistry]]): immutable `delta-<uuid>`
-  * directories under one root, referenced by an atomically-renamed
-  * `manifest-v<N>` text file — one header line (`<magic> <payload>`),
+  * directories under one root, referenced by a `manifest-v<N>` text file
+  * published with [[Publish.claim]] — one header line (`<magic> <payload>`),
   * then one line per live delta (`<name>\t<ledger>\t<n>`). A crash at
   * any point leaves the previous manifest intact and at worst an
   * unreferenced directory; a lost cross-process race surfaces loudly as
@@ -84,11 +86,11 @@ private[operators] object DeltaManifest {
       "staging-" + java.util.UUID.randomUUID().toString.take(12))
   }
 
-  /** Promote a staged delta to its immutable name (atomic rename). */
+  /** Publish a staged delta under a fresh immutable name. */
   def promote(staging: Path): String = {
     val name = "delta-" + java.util.UUID.randomUUID().toString.take(12)
-    Files.move(staging, staging.resolveSibling(name),
-      StandardCopyOption.ATOMIC_MOVE)
+    if (!Publish.claim(staging, staging.resolveSibling(name)))
+      throw new IllegalStateException(s"delta name $name already taken")
     name
   }
 
@@ -104,33 +106,12 @@ private[operators] object DeltaManifest {
     val tmp = root.resolve(
       ".manifest-tmp-" + java.util.UUID.randomUUID().toString.take(12))
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    // publish via link(2), NOT rename(2): on POSIX an ATOMIC_MOVE onto an
-    // existing target silently REPLACES it (rename semantics), which would
-    // turn a lost cross-process race into a silently dropped delta ref —
-    // link(2) fails EEXIST atomically, which is the loud failure the
-    // single-writer contract promises
-    try Files.createLink(root.resolve(s"manifest-v$version"), tmp)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"concurrent delta-store writer detected at manifest-v$version " +
-            s"under $root — writers are single-writer by contract", e)
-      case e: UnsupportedOperationException =>
-        // a filesystem without hard links cannot give us the
-        // EEXIST-atomic publish the single-writer contract relies on —
-        // fail with the actionable message rather than silently degrade
-        // to rename(2) (which REPLACES an existing target, turning a
-        // lost race into a dropped delta ref)
-        Files.deleteIfExists(tmp)
-        throw new UnsupportedOperationException(
-          s"the filesystem hosting $root does not support hard links, " +
-            "which the delta-store manifest commit requires for its " +
-            "atomic EEXIST-loud publish — host the state on a POSIX " +
-            "filesystem (every local/NFS/EFS-class mount qualifies)", e)
-    }
-    Files.deleteIfExists(tmp)
-    ()
+    // no-clobber: rename(2) would REPLACE an existing manifest, turning a
+    // lost cross-process race into a silently dropped delta ref
+    if (!Publish.claim(tmp, root.resolve(s"manifest-v$version")))
+      throw new IllegalStateException(
+        s"concurrent delta-store writer detected at manifest-v$version " +
+          s"under $root — writers are single-writer by contract")
   }
 
   /** Delete unreferenced artifacts under the root: staging leftovers,
@@ -154,8 +135,7 @@ private[operators] object DeltaManifest {
       Files.isRegularFile(p) &&
         p.getFileName.toString.startsWith(".manifest-tmp-")
     }
-    doomedDirs.foreach(p =>
-      graft.storage.ParquetLogBackend.deleteRecursively(p))
+    doomedDirs.foreach(Publish.deleteRecursively)
     doomedTmp.foreach(p => Files.deleteIfExists(p))
     doomedDirs.size + doomedTmp.size
   }

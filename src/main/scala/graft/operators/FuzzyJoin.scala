@@ -344,7 +344,7 @@ object FuzzyJoin extends org.apache.spark.internal.Logging {
         java.nio.file.Files.createDirectories(root) // non-POSIX fs
     }
     sys.addShutdownHook {
-      graft.storage.ParquetLogBackend.deleteRecursively(root)
+      graft.util.Publish.deleteRecursively(root)
     }
     root
   }
@@ -366,7 +366,7 @@ object FuzzyJoin extends org.apache.spark.internal.Logging {
               scala.util.Try(s.toLong).toOption).exists(pid =>
               ProcessHandle.of(pid).isPresent)
             if (!alive)
-              try graft.storage.ParquetLogBackend.deleteRecursively(p)
+              try graft.util.Publish.deleteRecursively(p)
               catch { case scala.util.control.NonFatal(_) => }
           }
       }
@@ -405,7 +405,7 @@ object FuzzyJoin extends org.apache.spark.internal.Logging {
     * then fail every micro-batch with no self-heal. Validates every
     * piece the generator needs plus the recorded row count against the
     * live relation's. */
-  private def validSnapshot(
+  private[graft] def validSnapshot(
       dir: java.nio.file.Path, expectCount: Long): Boolean =
     try {
       if (!java.nio.file.Files.isDirectory(dir.resolve("names"))) false
@@ -477,11 +477,11 @@ object FuzzyJoin extends org.apache.spark.internal.Logging {
       // partially destroyed (tmp cleaner): self-heal by re-staging
       logWarning(s"catalog snapshot at $published failed layout " +
         "validation — deleting and re-staging")
-      graft.storage.ParquetLogBackend.deleteRecursively(published)
+      graft.util.Publish.deleteRecursively(published)
     }
     // staging lives under the same per-process root: guarantees the
-    // ATOMIC_MOVE below stays same-filesystem and the exit hook covers
-    // a crashed staging dir
+    // publish below stays same-filesystem and the exit hook covers a
+    // crashed staging dir
     val staging = java.nio.file.Files.createTempDirectory(
       processRoot, "staging-")
     val target =
@@ -503,16 +503,11 @@ object FuzzyJoin extends org.apache.spark.internal.Logging {
         snapDirFor(frozenKey)
       } catch {
         case t: Throwable =>
-          graft.storage.ParquetLogBackend.deleteRecursively(staging)
+          graft.util.Publish.deleteRecursively(staging)
           throw t
       }
-    try java.nio.file.Files.move(staging, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException |
-          _: java.nio.file.DirectoryNotEmptyException =>
-        graft.storage.ParquetLogBackend.deleteRecursively(staging)
-    }
+    // a lost race keeps the winner's identical copy
+    graft.util.Publish.claim(staging, target)
     target.toString
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.queries.Similarity
+import graft.util.Publish
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,7 +82,7 @@ object IvfIndex {
     new IvfIndex(km.clusterCenters.map(_.toArray), assigned)
   }
 
-  /** Load for READING. Deliberately does NOT run [[recoverSwap]]: a plain
+  /** Load for READING. Deliberately does NOT run [[recoverSwaps]]: a plain
     * reader that lands inside compact's two-rename window (target moved to
     * `.old`, staging not yet renamed in) must not move `.old` back — that
     * mutation races the in-flight compact, whose second rename would then
@@ -100,13 +101,13 @@ object IvfIndex {
     * is torn mid-flight ([[splitCell]]/[[removeVectors]]/[[rebuild]]'s
     * two-rename window). Read-only — recovery runs only from the
     * synchronized maintenance entries. */
-  private[operators] def rootBase(dir: String): String =
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "centroids")) &&
-        java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(dir + ".old")))
-      dir + ".old"
+  private[operators] def rootBase(dir: String): String = {
+    import java.nio.file.{Files, Paths}
+    val old = Publish.oldOf(Paths.get(dir))
+    if (!Files.exists(Paths.get(dir, "centroids")) && Files.isDirectory(old))
+      old.toString
     else dir
+  }
 
   def load(spark: SparkSession, dir: String): IvfIndex = {
     val base = rootBase(dir)
@@ -134,8 +135,8 @@ object IvfIndex {
     * (the window between compact's two renames). */
   private[operators] def readMaybeOld(
       spark: SparkSession, target: java.nio.file.Path): org.apache.spark.sql.DataFrame = {
-    val old = target.resolveSibling(target.getFileName.toString + ".old")
-    val p = if (java.nio.file.Files.exists(target)) target else old
+    val p = if (java.nio.file.Files.exists(target)) target
+      else Publish.oldOf(target)
     spark.read.parquet(p.toString)
   }
 
@@ -173,8 +174,7 @@ object IvfIndex {
     synchronized {
       // maintenance entry: heal torn swaps BEFORE reading (under the same
       // lock compact/splitCell hold, so this can never race a rename pair)
-      recoverSwapRoot(dir)
-      recoverSwap(java.nio.file.Paths.get(dir, "cells"))
+      recoverSwaps(dir)
       val idx = load(spark, dir)
       // a rotated dir stores rotated vectors: rotate RAW input into the
       // index frame first (same boundary contract as PqIndex.appendVectors)
@@ -202,7 +202,7 @@ object IvfIndex {
     * writes one cell) via a staged dir + two renames.
     *
     * Crash safety: a death between the two renames leaves the complete
-    * pre-rewrite data in `cells.old`; [[recoverSwap]] — run at every
+    * pre-rewrite data in `cells.old`; [[recoverSwaps]] — run at every
     * [[load]], [[appendVectors]], and compact entry — rolls it back, so
     * the torn state heals on next touch instead of needing a human.
     * Concurrency: maintenance (upsert/compact) is SERIALIZED in-JVM on
@@ -213,7 +213,7 @@ object IvfIndex {
     * on either side of a rename. Content is byte-equal input rows;
     * quantizer untouched. */
   def compact(spark: SparkSession, dir: String): Unit = synchronized {
-    recoverSwapRoot(dir)
+    recoverSwaps(dir)
     compactRelation(spark, java.nio.file.Paths.get(dir, "cells"))
   }
 
@@ -233,7 +233,7 @@ object IvfIndex {
     * live in the split cell — silent recall loss), so the swap target is
     * the whole index dir: staging sibling → `dir` → `dir.old` → staging
     * renamed in. A crash between the renames heals at the next
-    * maintenance entry ([[recoverSwapRoot]]); plain readers fall back to
+    * maintenance entry ([[recoverSwaps]]); plain readers fall back to
     * the consistent `.old` generation read-only ([[load]]).
     *
     * Cost: one full index rewrite (a generation, like compact) — at test
@@ -273,9 +273,7 @@ object IvfIndex {
       spark: SparkSession, dir: String, cell: Int,
       trainTarget: Int = 4096, maxIter: Int = 5, seed: Long = 42L): Int =
     synchronized {
-      recoverSwapRoot(dir)
-      recoverSwap(java.nio.file.Paths.get(dir, "cells"))
-      recoverSwap(java.nio.file.Paths.get(dir, "pq_codes"))
+      recoverSwaps(dir)
       val hasPq = java.nio.file.Files.exists(
         java.nio.file.Paths.get(dir, "pq_codes"))
       val pq = if (hasPq) Some(PqIndex.load(spark, dir)) else None
@@ -316,7 +314,6 @@ object IvfIndex {
 
         // next generation, staged then swapped as ONE unit
         import spark.implicits._
-        import java.nio.file.{Files, Paths, StandardCopyOption}
         val staging = dir + ".split-" +
           java.util.UUID.randomUUID().toString.take(8)
         newAssign.write.mode("overwrite")
@@ -350,7 +347,8 @@ object IvfIndex {
             .parquet(s"$staging/pq_codebooks")
         }
         carryAuxRelations(spark, dir, staging)
-        commitGeneration(dir, staging)
+        Publish.swap(java.nio.file.Paths.get(staging),
+          java.nio.file.Paths.get(dir))
         newId
       } finally reassigned.unpersist()
     }
@@ -406,7 +404,7 @@ object IvfIndex {
     * Crash: staging never touches `dir`; a death before the commit
     * leaves the old generation serving untouched, a death between the
     * commit renames heals at the next maintenance entry
-    * ([[recoverSwapRoot]]), and plain readers inside the window fall
+    * ([[recoverSwaps]]), and plain readers inside the window fall
     * back to the consistent `.old` generation.
     *
     * @param k new cell count; 0 keeps the current one, [[AutoK]] resizes
@@ -420,9 +418,7 @@ object IvfIndex {
       spark: SparkSession, dir: String,
       k: Int = 0, maxIter: Int = 5, trainTarget: Int = 4096): DriftReport =
     synchronized {
-      recoverSwapRoot(dir)
-      recoverSwap(java.nio.file.Paths.get(dir, "cells"))
-      recoverSwap(java.nio.file.Paths.get(dir, "pq_codes"))
+      recoverSwaps(dir)
       val hasPq = java.nio.file.Files.exists(
         java.nio.file.Paths.get(dir, "pq_codes"))
       val pq = if (hasPq) Some(PqIndex.load(spark, dir)) else None
@@ -489,27 +485,11 @@ object IvfIndex {
         // the refit IS the new fit-time regime: snapshot the baseline
         // against the STAGED generation so it commits atomically with it
         snapshotDriftBaseline(spark, staging)
-        commitGeneration(dir, staging)
+        Publish.swap(java.nio.file.Paths.get(staging),
+          java.nio.file.Paths.get(dir))
       } finally assigned.unpersist()
       driftVerdict(spark, dir)
     }
-
-  /** Flip a fully-staged next generation in as THE index: `dir` →
-    * `dir.old` → staging renamed to `dir` → `.old` deleted. A crash
-    * between the renames heals at the next maintenance entry
-    * ([[recoverSwapRoot]]); plain readers inside the window fall back to
-    * the consistent `.old` generation read-only ([[load]]). The one
-    * generation-commit primitive [[splitCell]] and [[removeVectors]]
-    * share. */
-  private def commitGeneration(dir: String, staging: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val old = Paths.get(dir + ".old")
-    graft.storage.ParquetLogBackend.deleteRecursively(old)
-    Files.move(Paths.get(dir), old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(staging), Paths.get(dir),
-      StandardCopyOption.ATOMIC_MOVE)
-    graft.storage.ParquetLogBackend.deleteRecursively(old)
-  }
 
   /** REMOVE vectors from a persisted index — the vector twin of
     * [[SearchIndex.deleteDocs]] (takedowns / contaminated-source purges),
@@ -538,9 +518,7 @@ object IvfIndex {
   def removeVectors(
       spark: SparkSession, dir: String, ids: Seq[Long]): Long = synchronized {
     if (ids.isEmpty) return 0L
-    recoverSwapRoot(dir)
-    recoverSwap(java.nio.file.Paths.get(dir, "cells"))
-    recoverSwap(java.nio.file.Paths.get(dir, "pq_codes"))
+    recoverSwaps(dir)
     val hasPq = java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, "pq_codes"))
     val pq = if (hasPq) Some(PqIndex.load(spark, dir)) else None
@@ -574,7 +552,8 @@ object IvfIndex {
         .parquet(s"$staging/pq_codebooks")
     }
     carryAuxRelations(spark, dir, staging)
-    commitGeneration(dir, staging)
+    Publish.swap(java.nio.file.Paths.get(staging),
+      java.nio.file.Paths.get(dir))
     present
   }
 
@@ -818,41 +797,27 @@ object IvfIndex {
       .orderBy("cell")
   }
 
-  /** Roll back an INDEX-generation swap that died between renames
-    * (`dir` missing, `dir.old` present) — [[splitCell]]'s whole-dir
-    * analog of [[recoverSwap]]. */
-  private[operators] def recoverSwapRoot(dir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val target = Paths.get(dir)
-    val old = Paths.get(dir + ".old")
-    if (!Files.exists(target) && Files.isDirectory(old))
-      Files.move(old, target, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Roll back a swap that died between renames: `target` missing but
-    * `target.old` present ⇒ the old dir IS the data — restore it. */
-  private[operators] def recoverSwap(target: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val old = target.resolveSibling(target.getFileName.toString + ".old")
-    if (!Files.exists(target) && Files.isDirectory(old))
-      Files.move(old, target, StandardCopyOption.ATOMIC_MOVE)
+  /** Roll back every swap that died between its renames: the
+    * whole-index generation ([[splitCell]], [[removeVectors]],
+    * [[rebuild]]) first, then the per-relation compactions of `cells` and
+    * `pq_codes` ([[Publish.recover]]). Maintenance entries only, under
+    * this object's lock. */
+  private[operators] def recoverSwaps(dir: String): Unit = {
+    val root = java.nio.file.Paths.get(dir)
+    Publish.recover(root)
+    Seq("cells", "pq_codes").foreach(r => Publish.recover(root.resolve(r)))
   }
 
   private[operators] def compactRelation(
       spark: SparkSession, target: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    recoverSwap(target)
+    Publish.recover(target)
     val staging = target.resolveSibling(
       target.getFileName.toString + ".compact-" +
         java.util.UUID.randomUUID().toString.take(8))
     spark.read.parquet(target.toString)
       .repartition(col("cell"))
       .write.partitionBy("cell").parquet(staging.toString)
-    val old = target.resolveSibling(target.getFileName.toString + ".old")
-    graft.storage.ParquetLogBackend.deleteRecursively(old)
-    Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    graft.storage.ParquetLogBackend.deleteRecursively(old)
+    Publish.swap(staging, target)
   }
 
   /** Top-`topK` cosine neighbors per query over the `nProbe` nearest

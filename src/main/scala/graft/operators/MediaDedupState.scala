@@ -233,7 +233,7 @@ object MediaDedupState {
     cappedBandsOf(staged).write.parquet(s"$st/bands")
     vf.drop("phash").write.parquet(s"$st/card")
     val n = staged.count()
-    graft.storage.ParquetLogBackend.deleteRecursively(staging.resolve("vf"))
+    graft.util.Publish.deleteRecursively(staging.resolve("vf"))
     val deltaName = DeltaManifest.promote(staging)
     DeltaManifest.commit(dir, Magic, "", h.version + 1,
       (h.deltas :+ DeltaRef(deltaName, fingerprint, n))

@@ -317,7 +317,7 @@ object PackState {
       .write.parquet(s"$st/counters")
     val n = s.read.schema(org.apache.spark.sql.types.StructType
       .fromDDL(ContribSchema)).parquet(s"$st/contrib").count()
-    graft.storage.ParquetLogBackend.deleteRecursively(staging.resolve("raw"))
+    graft.util.Publish.deleteRecursively(staging.resolve("raw"))
 
     val deltaName = DeltaManifest.promote(staging)
     DeltaManifest.commit(dir, Magic, p.payload, h.version + 1,

@@ -241,9 +241,7 @@ object PqIndex {
   def appendVectors(spark: SparkSession, dir: String, emb: DataFrame): Long =
     IvfIndex.synchronized {
       // maintenance entry: heal torn swaps under the maintenance lock
-      IvfIndex.recoverSwapRoot(dir)
-      IvfIndex.recoverSwap(java.nio.file.Paths.get(dir, "cells"))
-      IvfIndex.recoverSwap(java.nio.file.Paths.get(dir, "pq_codes"))
+      IvfIndex.recoverSwaps(dir)
       val idx = load(spark, dir)
       import spark.implicits._
       // rotate incoming RAW vectors into the index's frame first — an
@@ -306,7 +304,7 @@ object PqIndex {
     }
 
   /** Load for READING — like [[IvfIndex.load]], deliberately does NOT run
-    * [[IvfIndex.recoverSwap]] (readers must not mutate swap state while a
+    * [[IvfIndex.recoverSwaps]] (readers must not mutate swap state while a
     * compact's rename pair may be in flight); falls back to the `.old`
     * pre-swap dir read-only. Recovery runs only from the synchronized
     * maintenance entry points. */

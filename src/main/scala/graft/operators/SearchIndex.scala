@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.util.Publish
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** A persisted LEXICAL search index: the inverted (token → postings)
   * relation — the text analog of [[IvfIndex]]'s build-once /
@@ -70,7 +71,7 @@ final class SearchIndex private[operators] (
     // batch whose shared doc_ids double-count in df/nDocs/scores (and
     // duplicate (doc, token) keys break searchPhrase's map build) —
     // incremental growth goes through appendDocs, by contract
-    require(SearchIndex.listDirs(Paths.get(dir, "meta")).isEmpty,
+    require(SearchIndex.committedBatches(dir).isEmpty,
       s"$dir already holds a committed search index; " +
         "use appendDocs to grow it (save is first-batch-only)")
     val batch = SearchIndex.newBatchId()
@@ -246,7 +247,7 @@ object SearchIndex {
       // so the redo's mode("append") cannot double its rows
       val orphan = Paths.get(dir, "postings", s"batch=$id")
       if (Files.isDirectory(orphan))
-        graft.storage.ParquetLogBackend.deleteRecursively(orphan)
+        graft.util.Publish.deleteRecursively(orphan)
     }
     val p = postingsOf(docs).withColumn("batch", lit(batch)).persist()
     try {
@@ -258,17 +259,17 @@ object SearchIndex {
         (if (range.isNullAt(0)) None else Some(range.getLong(0)),
          if (range.isNullAt(1)) None else Some(range.getLong(1)))
       // overlap guard: exact check ONLY for active POSTINGS batches whose
-      // id range intersects the new batch's (a legacy meta without a
-      // range is treated as intersecting — unknown must not mean
-      // unchecked; tombstone metas hold no postings and never suspect;
-      // a dir with no index yet has nothing to overlap — bootstrap)
+      // id range intersects the new batch's (an empty batch has no range
+      // and holds nothing to overlap; tombstone metas hold no postings
+      // and never suspect; a dir with no index yet has nothing to
+      // overlap — bootstrap)
       val metas =
-        if (listDirs(Paths.get(dir, "meta")).isEmpty) Seq.empty[Meta]
+        if (committedBatches(dir).isEmpty) Seq.empty[Meta]
         else activeMetas(spark, dir)
       val suspects = metas.filterNot(_.isTombstone).filter { m =>
         docMin.isDefined &&
-          m.docMin.forall(lo => lo <= docMax.get) &&
-          m.docMax.forall(hi => hi >= docMin.get)
+          m.docMin.exists(lo => lo <= docMax.get) &&
+          m.docMax.exists(hi => hi >= docMin.get)
       }.map(_.batch)
       if (suspects.nonEmpty) {
         // a TOMBSTONED doc_id is not "already indexed" — its postings
@@ -380,8 +381,7 @@ object SearchIndex {
     // deletes C1's meta but before B0's — B0 would become unsuperseded
     // and double-count. Listing every meta dir closes the window for any
     // deletion order.
-    val allCommitted = listDirs(Paths.get(dir, "meta"))
-      .map(_.getFileName.toString)
+    val allCommitted = committedBatches(dir)
     val batch = newBatchId()
     idx.postings
       .select("token", "tbucket", "doc_id", "cnt", "dl", "pos")
@@ -402,21 +402,23 @@ object SearchIndex {
     listDirs(postRoot).foreach { p =>
       val name = p.getFileName.toString
       if (name.startsWith("batch=") && !keep(name.stripPrefix("batch=")))
-        graft.storage.ParquetLogBackend.deleteRecursively(p)
+        graft.util.Publish.deleteRecursively(p)
     }
     val metaRoot = Paths.get(dir, "meta")
     listDirs(metaRoot).foreach { p =>
       if (!keep(p.getFileName.toString))
-        graft.storage.ParquetLogBackend.deleteRecursively(p)
+        graft.util.Publish.deleteRecursively(p)
     }
     // tombstones are now APPLIED (the rewritten batch holds only live
     // postings), so every tombstone dir — committed or orphaned — is
     // garbage; the physical drop the delete lifecycle promises
     listDirs(Paths.get(dir, "tombstones")).foreach(
-      graft.storage.ParquetLogBackend.deleteRecursively)
+      graft.util.Publish.deleteRecursively)
   }
 
-  private case class Meta(
+  /** One committed batch's row under `meta/<batch>`, written and read
+    * with this case class's schema. */
+  private[operators] case class Meta(
       batch: String, nDocs: Long, nTokens: Long,
       supersedes: Seq[String], sourceFp: Option[String],
       docMin: Option[Long], docMax: Option[Long],
@@ -424,27 +426,9 @@ object SearchIndex {
     def isTombstone: Boolean = kind == "tomb"
   }
 
-  /** The meta relation's EXPLICIT read schema. Meta rows written before a
-    * column existed (doc_min/doc_max predate round 10, kind predates
-    * round 11) lack it on disk, and a schema-sampled read over a mixed
-    * meta dir would fail with an unresolved column — the explicit schema
-    * surfaces legacy rows as NULLS instead, which downstream code already
-    * treats conservatively (an unknown doc range is "intersecting" for
-    * the overlap guard; a null kind is a postings batch — tombstones
-    * postdate the column). Every column is nullable for the same
-    * forward-compat reason. */
-  private val MetaSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("batch", StringType),
-      StructField("n_docs", LongType),
-      StructField("n_tokens", LongType),
-      StructField("supersedes", ArrayType(StringType)),
-      StructField("source_fp", StringType),
-      StructField("doc_min", LongType),
-      StructField("doc_max", LongType),
-      StructField("kind", StringType)))
-  }
+  /** The batch ids committed under `dir/meta` (staging dirs excluded). */
+  private[graft] def committedBatches(dir: String): Seq[String] =
+    listDirs(Paths.get(dir, "meta")).map(_.getFileName.toString)
 
   private def listDirs(root: java.nio.file.Path): Seq[java.nio.file.Path] = {
     if (!Files.isDirectory(root)) return Seq.empty
@@ -469,17 +453,10 @@ object SearchIndex {
       val dirs = listDirs(Paths.get(dir, "meta"))
       require(dirs.nonEmpty, s"no search index committed under $dir")
       try {
-        val rows = spark.read.schema(MetaSchema)
-          .parquet(dirs.map(_.toString): _*)
-          .select("batch", "n_docs", "n_tokens", "supersedes", "source_fp",
-            "doc_min", "doc_max", "kind")
-          .collect()
-          .map(r => Meta(r.getString(0), r.getLong(1), r.getLong(2),
-            Option(r.getSeq[String](3)).getOrElse(Seq.empty),
-            Option(r.getString(4)).filter(_.nonEmpty),
-            if (r.isNullAt(5)) None else Some(r.getLong(5)),
-            if (r.isNullAt(6)) None else Some(r.getLong(6)),
-            Option(r.getString(7)).getOrElse("post")))
+        import spark.implicits._
+        // the writer's schema, given explicitly: no inference job per read
+        val rows = spark.read.schema(implicitly[Encoder[Meta]].schema)
+          .parquet(dirs.map(_.toString): _*).as[Meta].collect()
         val superseded = rows.flatMap(_.supersedes).toSet
         return rows.filterNot(m => superseded(m.batch)).sortBy(_.batch).toSeq
       } catch {
@@ -502,13 +479,12 @@ object SearchIndex {
     val metaRoot = Paths.get(dir, "meta")
     Files.createDirectories(metaRoot)
     val staging = metaRoot.resolve(s".staging-$batch")
-    Seq((batch, nDocs, nTokens, supersedes, fingerprint.getOrElse(""),
+    Seq(Meta(batch, nDocs, nTokens, supersedes, fingerprint,
         docMin, docMax, kind))
-      .toDF("batch", "n_docs", "n_tokens", "supersedes", "source_fp",
-        "doc_min", "doc_max", "kind")
-      .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    Files.move(staging, metaRoot.resolve(batch),
-      StandardCopyOption.ATOMIC_MOVE)
+      .toDS().coalesce(1).write.mode("overwrite").parquet(staging.toString)
+    if (!Publish.claim(staging, metaRoot.resolve(batch)))
+      throw new IllegalStateException(
+        s"search index batch $batch is already committed under $dir")
   }
 
   /** The active tombstone (batch, doc_id) pairs — which doc has been

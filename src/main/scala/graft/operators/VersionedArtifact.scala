@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** The shared versioned-artifact lifecycle under a model directory —
   * the machinery [[BpeModel]] introduced, factored out so every
@@ -11,7 +11,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *  - `save` stages the payload in a sibling dir, stamps the optional
   *    corpus fingerprint as a `_fingerprint` file INSIDE the staging dir
   *    (commits atomically with the payload; parquet readers skip
-  *    underscore files), and atomically renames to the next version —
+  *    underscore files), and claims the next version
+  *    ([[graft.util.Publish.claim]]) —
   *    a crashed writer can never leave a partial version visible, and
   *    racing writers get distinct versions;
   *  - `versions`/`fingerprintOf` expose the history; callers holding the
@@ -51,7 +52,7 @@ private[operators] object VersionedArtifact {
 
   /** Stage (via `write(stagingPath)`), stamp, and atomically claim the
     * next version number; returns it. The JVM-level lock serializes the
-    * local case; cross-JVM races resolve by the rename failing on an
+    * local case; cross-JVM races resolve by the claim failing on an
     * existing target, retried with the next number. */
   def save(dir: String, fingerprint: Option[String])(
       write: String => Unit): Long = synchronized {
@@ -66,29 +67,11 @@ private[operators] object VersionedArtifact {
       fingerprint.foreach(fp => Files.write(
         staging.resolve("_fingerprint"),
         fp.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      try {
-        Files.move(staging, root.resolve(s"v=$attempt"),
-          StandardCopyOption.ATOMIC_MOVE)
+      // a lost cross-JVM race means "taken, try the next"
+      if (graft.util.Publish.claim(staging, root.resolve(s"v=$attempt")))
         done = attempt
-      } catch {
-        // a lost cross-JVM race surfaces as EEXIST when the target is a
-        // file/empty dir, but on Linux as ENOTEMPTY
-        // (DirectoryNotEmptyException) when renaming onto the winner's
-        // populated v=N directory — both mean "taken, try the next"
-        case _: java.nio.file.FileAlreadyExistsException |
-            _: java.nio.file.DirectoryNotEmptyException =>
-          deleteRecursively(staging)
-          attempt += 1
-      }
+      else attempt += 1
     }
     done
   }
-
-  def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(Files.walk(p))(
-        _.sorted(java.util.Comparator.reverseOrder[Path]())
-          .iterator().asScala.toList).foreach(Files.deleteIfExists(_))
-    }
 }

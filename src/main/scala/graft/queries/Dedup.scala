@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.util.Tables
+import graft.util.{ArtifactCache, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -402,9 +402,9 @@ object Dedup {
     * dedup_incremental entries then exercise LOAD + VERDICT, the recurring
     * serving path of an intake deployment. */
   private def ensureDedupState(s: SparkSession, dir: String): String =
-    graft.util.ArtifactCache.ensure(
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(dir, "documents.parquet"),
-      "graft-dedupstate3", "manifest-v1") { staging =>
+      ArtifactCache.Kind("graft-dedupstate", "manifest-v1", 3)) { staging =>
       graft.operators.DedupState.admit(s, staging, dropDocs(s, dir, 0),
         fingerprint = "drop-1")
       ()
@@ -415,9 +415,9 @@ object Dedup {
     * [[graft.operators.MediaDedupState]]; dedup_incremental_phash then
     * exercises LOAD + VERDICT — the recurring multimodal intake path. */
   private def ensureMediaState(s: SparkSession, dir: String): String =
-    graft.util.ArtifactCache.ensure(
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(dir, "documents.parquet"),
-      "graft-mediastate", "manifest-v1") { staging =>
+      ArtifactCache.Kind("graft-mediastate", "manifest-v1", 1)) { staging =>
       graft.operators.MediaDedupState.admit(s, staging,
         phashTable(s, dir).filter(col("doc_id") % 2 === 0)
           .select(col("doc_id").as("img_id"), col("phash")),
@@ -559,9 +559,9 @@ object Dedup {
   /** Quality-gated twin of [[ensureDedupState]] (separate cache prefix:
     * different admitted content ⇒ different state). */
   private def ensureGatedDedupState(s: SparkSession, dir: String): String =
-    graft.util.ArtifactCache.ensure(
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(dir, "documents.parquet"),
-      "graft-dedupstateq3", "manifest-v1") { staging =>
+      ArtifactCache.Kind("graft-dedupstateq", "manifest-v1", 3)) { staging =>
       graft.operators.DedupState.admit(s, staging,
         gatedDropDocs(s, dir, 0), fingerprint = "drop-1")
       ()
@@ -580,9 +580,9 @@ object Dedup {
   /** Embedding-tier twin of [[ensureDedupState]], keyed by the
     * embeddings parquet. */
   private def ensureSemDedupState(s: SparkSession, dir: String): String =
-    graft.util.ArtifactCache.ensure(
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(dir, "embeddings.parquet"),
-      "graft-dedupstatee2", "manifest-v1") { staging =>
+      ArtifactCache.Kind("graft-dedupstatee", "manifest-v1", 2)) { staging =>
       graft.operators.DedupState.admit(s, staging, embDrop(s, dir, 0),
         fingerprint = "drop-1")
       ()
@@ -1598,9 +1598,9 @@ object Dedup {
     * testdata dir: the registry's content derives from documents AND
     * embeddings. */
   private def ensureDecontamRegistry(s: SparkSession, dir: String): String =
-    graft.util.ArtifactCache.ensure(
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(dir),
-      "graft-decontamreg3", "manifest-v3") { staging =>
+      ArtifactCache.Kind("graft-decontamreg", "manifest-v3", 3)) { staging =>
       val bench = Tables(s, dir, "documents")
         .filter(col("doc_id") % BenchmarkMod === 0)
       graft.operators.DecontamRegistry.register(s, staging,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.util.Tables
+import graft.util.{ArtifactCache, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -49,7 +49,7 @@ object Similarity {
   private def opqRotation(
       e: DataFrame, dir: String): Array[Double] = {
     val fp =
-      try Some(graft.util.ArtifactCache.fingerprintOf(
+      try Some(ArtifactCache.fingerprintOf(
         java.nio.file.Paths.get(dir, "embeddings.parquet")))
       catch { case scala.util.control.NonFatal(_) => None }
     fp match {
@@ -81,7 +81,8 @@ object Similarity {
     * the index dir, and ann_opq then exercises the full serving path:
     * load from disk in whatever process, probe with RAW queries. */
   private def ensureOpqIndex(s: SparkSession, dir: String): String =
-    ensureEmbArtifact(s, dir, "graft-opqidx", "pq_codes") { staging =>
+    ensureEmbArtifact(s, dir,
+      ArtifactCache.Kind("graft-opqidx", "pq_codes", 1)) { staging =>
       val e = embOf(s, dir)
       graft.operators.PqIndex
         .build(e, m = PqM, kCodes = PqK,
@@ -131,7 +132,8 @@ object Similarity {
     * ann_ivf_persisted query then exercises LOAD + PROBE — the serving
     * path — against it. */
   private def ensureIndex(s: SparkSession, dir: String): String =
-    ensureEmbArtifact(s, dir, "graft-ivfidx", "centroids") { staging =>
+    ensureEmbArtifact(s, dir,
+      ArtifactCache.Kind("graft-ivfidx", "centroids", 1)) { staging =>
       graft.operators.IvfIndex.build(embOf(s, dir)).save(staging)
     }
 
@@ -139,7 +141,8 @@ object Similarity {
     * the serving artifact dedup_semantic_pq probes (√n coarse sizing,
     * the corpus-probe contract SCALING.md prices). */
   private[graft] def ensurePqIndex(s: SparkSession, dir: String): String =
-    ensureEmbArtifact(s, dir, "graft-pqidx", "pq_codes") { staging =>
+    ensureEmbArtifact(s, dir,
+      ArtifactCache.Kind("graft-pqidx", "pq_codes", 1)) { staging =>
       val e = embOf(s, dir)
       val n = e.count()
       val coarseK = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -152,15 +155,12 @@ object Similarity {
     Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
-  /** [[graft.util.ArtifactCache]] keyed to this dir's embeddings parquet:
-    * `readyMarker` names the entry whose existence proves a complete
-    * artifact. */
+  /** [[graft.util.ArtifactCache]] keyed to this dir's embeddings parquet. */
   private def ensureEmbArtifact(
-      s: SparkSession, dir: String, prefix: String, readyMarker: String)(
+      s: SparkSession, dir: String, kind: ArtifactCache.Kind)(
       build: String => Unit): String =
-    graft.util.ArtifactCache.ensure(
-      java.nio.file.Paths.get(dir, "embeddings.parquet"),
-      prefix, readyMarker)(build)
+    ArtifactCache.ensure(
+      java.nio.file.Paths.get(dir, "embeddings.parquet"), kind)(build)
 
   // text_hash_embed: hashing-trick featurizer dimensionality. 16 buckets =
   // one hex digit of md5(token), so the bucket function costs a single

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.util.Tables
+import graft.util.{ArtifactCache, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -825,9 +825,9 @@ object TextAnalysis {
     * fresh state, then drop 2 continuing drop 1's open bins — the
     * pipeline_drop_pack entry then just reads training rows. */
   private def ensurePackState(s: SparkSession, dir: String): String =
-    graft.util.ArtifactCache.ensure(
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(dir, "documents.parquet"),
-      "graft-packstate2", "manifest-v2") { staging =>
+      ArtifactCache.Kind("graft-packstate", "manifest-v2", 2)) { staging =>
       val ids = tokenIdsOf(s, dir, learnBpeMergesCached(s, dir))
       graft.operators.PackState.pack(s, staging,
         ids.filter(col("doc_id") % 2 === 0), "drop-1", packParams)
@@ -842,9 +842,9 @@ object TextAnalysis {
     * semantic decontamination) before packing. Keyed by the whole
     * testdata dir (the curation reads documents AND embeddings). */
   private def ensureCuratedPackState(s: SparkSession, dir: String): String =
-    graft.util.ArtifactCache.ensure(
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(dir),
-      "graft-packstatec2", "manifest-v2") { staging =>
+      ArtifactCache.Kind("graft-packstatec", "manifest-v2", 2)) { staging =>
       val ids = tokenIdsOf(s, dir, learnBpeMergesCached(s, dir))
       graft.operators.PackState.pack(s, staging,
         ids.join(Dedup.curatedDropIds(s, dir, 0), Seq("doc_id")),
@@ -884,12 +884,12 @@ object TextAnalysis {
     * (pipeline_drop_train_scrubbed): each drop packs the span-scrubbed
     * curated text. */
   private def ensureScrubbedPackState(s: SparkSession, dir: String): String =
-    graft.util.ArtifactCache.ensure(
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(dir),
-      // prefix bumped r17: the scrub composed into this state became
+      // version 2: the scrub composed into this state became
       // phase-independent (stride-1 probe) — cached states built under
       // the aligned-only scrub would disagree with the new oracle
-      "graft-packstates2", "manifest-v2") { staging =>
+      ArtifactCache.Kind("graft-packstates", "manifest-v2", 2)) { staging =>
       val merges = learnBpeMergesCached(s, dir)
       graft.operators.PackState.pack(s, staging,
         scrubbedCuratedIds(s, dir, 0, merges), "drop-1", packParams)
@@ -1162,14 +1162,13 @@ object TextAnalysis {
     }
 
   private def ensureSearchIndex(s: SparkSession, dir: String): String =
-    // searchidx4: the round-10 meta layout (doc_min/doc_max for the
-    // appendDocs overlap guard) atop the round-9 batch-manifest layout
-    // (dl + positional postings, meta commit markers, no precomputed
-    // idf) — the bumped prefix orphans any cached prior-layout index
-    // instead of misreading it
-    graft.util.ArtifactCache.ensure(
+    // version 5: meta rows take the columns of SearchIndex.Meta, atop
+    // the round-9 batch-manifest layout (dl + positional postings, meta
+    // commit markers, no precomputed idf) — the bumped version orphans
+    // any cached prior-layout index instead of misreading it
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(dir, "documents.parquet"),
-      "graft-searchidx4", "postings") { staging =>
+      ArtifactCache.Kind("graft-searchidx", "postings", 5)) { staging =>
       graft.operators.SearchIndex.build(
         Tables(s, dir, "documents").select(col("doc_id"), col("text")))
         .save(staging, fingerprint = corpusKey(dir))
@@ -1353,7 +1352,7 @@ object TextAnalysis {
     * process (the bench/verify shape) — the in-process stand-in for
     * "persist train_bpe's table" in a production pipeline. Keyed on the
     * corpus files' name+size+mtime fingerprint
-    * ([[graft.util.ArtifactCache.fingerprintOf]]), so an overwritten
+    * ([[ArtifactCache.fingerprintOf]]), so an overwritten
     * documents.parquet — the specs' temp dirs — can never serve stale
     * merges; a corpus the local fingerprint can't see (remote fs) just
     * learns uncached. The catch covers ONLY the fingerprint I/O: a genuine
@@ -1373,7 +1372,7 @@ object TextAnalysis {
     * so the two paths can never key the same corpus differently. The
     * catch covers ONLY the fingerprint I/O. */
   private def corpusKey(dir: String): Option[String] =
-    (try Some(graft.util.ArtifactCache.fingerprintOf(
+    (try Some(ArtifactCache.fingerprintOf(
       java.nio.file.Paths.get(dir, "documents.parquet")))
     catch { case scala.util.control.NonFatal(_) => None })
       .map(f => s"$dir|$f")
@@ -1408,26 +1407,20 @@ object TextAnalysis {
 
   /** Stage (idempotently, corpus-fingerprint-keyed) the intake drop dir:
     * the documents table as [[IntakeCleanShards]] gzip JSONL shards plus
-    * the two fixture shards. A `_INTAKE_READY` marker gates completeness
-    * (written AFTER the fixtures — `_SUCCESS` alone would race a crash
-    * between the corpus write and the fixture writes). */
-  private[queries] def intakeShards(s: SparkSession, dir: String): String = {
-    val key = corpusKey(dir).map { ck =>
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(ck.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-    }.getOrElse(java.util.UUID.randomUUID().toString.take(12))
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-intake-$key")
-    if (!java.nio.file.Files.exists(root.resolve("_INTAKE_READY"))) {
+    * the two fixture shards, published whole by
+    * [[graft.util.ArtifactCache]]. */
+  private[queries] def intakeShards(s: SparkSession, dir: String): String =
+    ArtifactCache.ensure(
+      java.nio.file.Paths.get(dir, "documents.parquet"),
+      ArtifactCache.Kind(
+        "graft-intake", "fixture-corrupt.json.gz", 1)) { root =>
       graft.sources.CorpusJsonl.write(
-        Tables(s, dir, "documents"), root.toString,
-        shards = IntakeCleanShards)
+        Tables(s, dir, "documents"), root, shards = IntakeCleanShards)
       // line-quarantine fixture: IntakeBadLines malformed lines (two
       // parse errors + one id-less object)
       val badOut = new java.util.zip.GZIPOutputStream(
         java.nio.file.Files.newOutputStream(
-          root.resolve("fixture-badlines.json.gz")))
+          java.nio.file.Paths.get(root, "fixture-badlines.json.gz")))
       try badOut.write(
         ("{\"doc_id\": oops\n" +
           "not json at all\n" +
@@ -1435,12 +1428,9 @@ object TextAnalysis {
       finally badOut.close()
       // file-quarantine fixture: a .gz whose bytes are not gzip at all
       java.nio.file.Files.write(
-        root.resolve("fixture-corrupt.json.gz"), Array.fill[Byte](256)(0x42))
-      java.nio.file.Files.write(
-        root.resolve("_INTAKE_READY"), Array.empty[Byte])
+        java.nio.file.Paths.get(root, "fixture-corrupt.json.gz"),
+        Array.fill[Byte](256)(0x42))
     }
-    root.toString
-  }
 
   private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
     String, Memo[Seq[(Long, String, String, String, Long)]]]()
@@ -1898,13 +1888,17 @@ object TextAnalysis {
     * spec can place a stale model at the EXACT root the pipeline will
     * read. */
   private[graft] def bpeModelRoot(s: SparkSession, dir: String): Option[String] =
+    corpusRoot(dir, "graft-bpemodel")
+
+  /** `<tmpdir>/<prefix>-<key>` keyed by `dir`'s corpus fingerprint, or
+    * None when the fingerprint is unreadable. */
+  private def corpusRoot(dir: String, prefix: String): Option[String] =
     corpusKey(dir).map { ck =>
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(ck.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.take(12)
       java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-bpemodel-$key").toString
+        sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"$prefix-$key").toString
     }
 
   /** STALENESS CONTRACT (BpeModelStalenessSpec pins both halves):
@@ -2040,14 +2034,7 @@ object TextAnalysis {
     * merge tables are different models of the same corpus and must never
     * shadow each other at one path. */
   private[graft] def bpeByteModelRoot(s: SparkSession, dir: String): Option[String] =
-    corpusKey(dir).map { ck =>
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(ck.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-bpemodelb-$key").toString
-    }
+    corpusRoot(dir, "graft-bpemodelb")
 
   /** [[persistedMerges]] for the BYTE model — the identical staleness
     * contract (fingerprint-keyed root, in-artifact fingerprint verified
@@ -2585,25 +2572,18 @@ object TextAnalysis {
     // [[graft.sources.CorpusJsonl]]) → schema-pinned PERMISSIVE read →
     // back. The oracle is the IDENTITY over the parquet table, so the
     // gate proves the write+read boundary loses and alters nothing —
-    // newlines, unicode, nulls — md5 of the text included. The shard
-    // materialization is corpus-fingerprint-keyed and idempotent
-    // (_SUCCESS gates completeness, overwrite heals partial writes);
-    // an unreadable fingerprint just rewrites per run.
+    // newlines, unicode, nulls — md5 of the text included. The shards
+    // are a corpus-fingerprint-keyed [[graft.util.ArtifactCache]].
     "jsonl_roundtrip" -> { (s, dir) =>
-      val d = Tables(s, dir, "documents")
-      val key = corpusKey(dir).map { ck =>
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(ck.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(12)
-      }.getOrElse(java.util.UUID.randomUUID().toString.take(12))
-      val root = java.nio.file.Paths.get(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-jsonl-$key")
-      if (!java.nio.file.Files.exists(root.resolve("_SUCCESS")))
+      val root = ArtifactCache.ensure(
+          java.nio.file.Paths.get(dir, "documents.parquet"),
+          ArtifactCache.Kind("graft-jsonl", "_SUCCESS", 1)) { st =>
         // 32 shards: gzip isn't splittable, so shard count caps BOTH the
         // write's deflate parallelism and the read side's task count
-        graft.sources.CorpusJsonl.write(d, root.toString, shards = 32)
-      graft.sources.CorpusJsonl.read(s, root.toString)
+        graft.sources.CorpusJsonl.write(
+          Tables(s, dir, "documents"), st, shards = 32)
+      }
+      graft.sources.CorpusJsonl.read(s, root)
         .select(col("doc_id"), col("lang"), col("source"),
           col("n_chars"), md5(col("text")).as("text_md5"))
         .orderBy("doc_id")

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.core.EventData
 import graft.storage.ParquetLogBackend
+import graft.util.ArtifactCache
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -18,9 +19,9 @@ import org.apache.spark.sql.functions.col
 object GraftLogCache {
 
   def ensure(spark: SparkSession, sfDir: String): String =
-    graft.util.ArtifactCache.ensure(
+    ArtifactCache.ensure(
       java.nio.file.Paths.get(sfDir, "events.parquet"),
-      "graft-logcache", "meta.json") { staging =>
+      ArtifactCache.Kind("graft-logcache", "meta.json", 1)) { staging =>
       val b = ParquetLogBackend.create(spark, staging,
         compactThreshold = 1000000, compactIntervalMs = 0)
       try {

@@ -3,12 +3,13 @@ package graft.storage
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.core._
 import graft.exprs.EventOps
+import graft.util.Publish
 import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max => smax}
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
@@ -25,9 +26,14 @@ import scala.jdk.CollectionConverters._
   *  - `segments/` — columnar home of compacted history; what scans read at
   *    scale (parallel, prunable, column-projected). [[compact]] writes a
   *    segment from the tail it holds, with parquet-hadoop on the calling
-  *    thread (no Spark job), and fsyncs it before the commit log drops the
-  *    lines it covers; [[coalesceSegments]] rewrites existing segments in
-  *    parallel through Spark's writer, in the same layout. Segments are zstd
+  *    thread (no Spark job), and publishes it durably
+  *    ([[graft.util.Publish.claim]]) before the commit log drops the lines
+  *    it covers; [[coalesceSegments]] rewrites existing segments in
+  *    parallel through Spark's writer, in the same layout, and swaps the
+  *    directory in ([[graft.util.Publish.swap]]). Every staged write of the
+  *    log — segments, the coalesced directory, commit-log rotation and
+  *    `meta.json` — goes through [[graft.util.Publish]]: forced, renamed,
+  *    then its directory fsync'd. Segments are zstd
   *    (entropy-coded: ~0.57 disk bytes per user byte, where snappy kept
   *    ~0.90) with Parquet pages of at most one read batch
   *    ([[EventSchema.MaxReadBatchSize]] rows), so a version-bounded page
@@ -130,10 +136,10 @@ final class ParquetLogBackend private (
     * Spark job. A timer compaction runs on its own thread, so appends stay
     * concurrent with its segment write; a size-triggered one runs inside
     * [[persist]] on the appending thread, under the sequencer lock, so
-    * appends wait for it. Crash-safe: the segment file and its directory
-    * entry are fsync'd before rotation drops the commit lines it covers,
-    * segments are append-only and the rotation is an atomic rename;
-    * recovery trusts max(version) actually in segments. */
+    * appends wait for it. Crash-safe: the segment is published durably
+    * (file and directory entry fsync'd) before rotation drops the commit
+    * lines it covers, segments are append-only and the rotation is an
+    * atomic replace; recovery trusts max(version) actually in segments. */
   def compact(): Unit = compactLock.synchronized {
     val batch = ioLock.synchronized(tail.toList)
     if (batch.isEmpty) return
@@ -146,25 +152,23 @@ final class ParquetLogBackend private (
       s"segments.write-${java.util.UUID.randomUUID().toString.take(8)}"))
     val part = scratch.resolve("part.parquet")
     ParquetLogBackend.writeSegment(batch, part)
-    if (!Files.exists(segmentsDir)) {
-      Files.createDirectories(segmentsDir)
-      ParquetLogBackend.fsyncDir(dir)
-    }
     val (v0, v1) = (batch.head.version, batch.last.version)
     val target = segmentsDir.resolve(ParquetLogBackend.segmentName(v0, v1))
-    // ONE lock section moves the file in, registers it, and drops the tail
-    // prefix — snapshots (which capture manifest + tail under the same
-    // lock) can never see a batch in both places or in neither.
+    // durable before rotation cuts the batch's commit lines, or a power
+    // loss can lose acknowledged commits. Published outside ioLock: the
+    // snapshots plan from the manifest, not a listing, and the
+    // out-of-process view drops the still-replayed tail by watermark.
+    if (!Publish.claim(part, target))
+      throw new IllegalStateException(s"segment $target already exists")
+    // ONE lock section registers the segment and drops the tail prefix —
+    // snapshots (which capture manifest + tail under the same lock) can
+    // never see a batch in both places or in neither.
     ioLock.synchronized {
-      Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
       manifest += ((target.toString, v0, v1))
       tail.dropInPlace(batch.length)
       segmentMaxVersion = v1
     }
-    // the move must be durable before rotation cuts the batch's commit
-    // lines: otherwise a power loss can lose acknowledged commits
-    ParquetLogBackend.fsyncDir(segmentsDir)
-    deleteRecursively(scratch)
+    Publish.deleteRecursively(scratch)
     rotateCommitLog()
     // file-count hygiene: timer compaction writes one small file per
     // interval; unchecked, scan planning drowns in file metadata long
@@ -183,12 +187,12 @@ final class ParquetLogBackend private (
       _.filter(p => p.toString.endsWith(".parquet")).count().toInt)
 
   /** Rewrite the segment directory into ~`targetBytes` files. Crash-safe
-    * via a rename dance (`segments.rewrite` staged → `segments` moved to
-    * `segments.old` → staged promoted → old deleted); [[recover]] rolls an
-    * interrupted swap back to the old directory. In-flight lazy snapshot
-    * DataFrames race the swap window (~ms) like any file-level compaction —
-    * run from the maintenance path (or let [[compact]] trigger it), not
-    * concurrently with long scans. */
+    * via [[graft.util.Publish.swap]] (`segments.rewrite` staged →
+    * `segments` moved to `segments.old` → staged promoted → old deleted);
+    * [[recover]] rolls an interrupted swap back to the old directory.
+    * In-flight lazy snapshot DataFrames race the swap window (~ms) like any
+    * file-level compaction — run from the maintenance path (or let
+    * [[compact]] trigger it), not concurrently with long scans. */
   def coalesceSegments(targetBytes: Long = 128L << 20): Unit =
     compactLock.synchronized {
       if (!Files.exists(segmentsDir)) return
@@ -202,7 +206,7 @@ final class ParquetLogBackend private (
       // re-rewrite everything on every compaction forever
       if (parts >= segmentFileCount()) return
       val staging = dir.resolve("segments.rewrite")
-      deleteRecursively(staging)
+      Publish.deleteRecursively(staging)
       // Range-partition on version (vs plain coalesce): the rewritten files
       // get DISJOINT version ranges, so the manifest prunes bounded scans to
       // exactly the overlapping files even after history is rewritten.
@@ -210,7 +214,10 @@ final class ParquetLogBackend private (
         spark.read.schema(EventSchema.schema).parquet(segmentsDir.toString)
           .repartitionByRange(parts, col("version")),
         staging)
-      // one stats job over the staging output → self-describing names
+      // one stats job over the staging output → self-describing names,
+      // each file claimed under its name inside the (invisible) stage;
+      // the claims force the files here, outside ioLock, so the swap's
+      // force under the lock finds little left to write
       import org.apache.spark.sql.functions.{input_file_name, min => smin}
       val ranges = spark.read.schema(EventSchema.schema).parquet(staging.toString)
         .groupBy(input_file_name().as("f"))
@@ -219,20 +226,17 @@ final class ParquetLogBackend private (
         .map { r =>
           val src = Paths.get(java.net.URI.create(r.getString(0)).getPath)
           val name = ParquetLogBackend.segmentName(r.getLong(1), r.getLong(2))
-          Files.move(src, staging.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+          if (!Publish.claim(src, staging.resolve(name)))
+            throw new IllegalStateException(s"segment $name already exists")
           (name, r.getLong(1), r.getLong(2))
         }
-      val old = dir.resolve("segments.old")
-      deleteRecursively(old)
       ioLock.synchronized {
-        Files.move(segmentsDir, old, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(staging, segmentsDir, StandardCopyOption.ATOMIC_MOVE)
+        Publish.swap(staging, segmentsDir)
         manifest.clear()
         ranges.foreach { case (name, v0, v1) =>
           manifest += ((segmentsDir.resolve(name).toString, v0, v1))
         }
       }
-      deleteRecursively(old)
     }
 
   /** The Spark write of [[coalesceSegments]], in the one segment layout
@@ -247,9 +251,6 @@ final class ParquetLogBackend private (
       .option("parquet.page.row.count.limit", EventSchema.MaxReadBatchSize.toLong)
       .parquet(out.toString)
 
-  private def deleteRecursively(p: Path): Unit =
-    ParquetLogBackend.deleteRecursively(p)
-
   /** Drop commit-log lines fully covered by segments (last version <=
     * watermark). Called under compactLock only. The filtered rewrite and its
     * fsync run WITHOUT ioLock so concurrent appends aren't stalled for the
@@ -260,9 +261,6 @@ final class ParquetLogBackend private (
     // Stable prefix boundary: len0 is captured under ioLock, so it sits on a
     // commit-line boundary (persist writes a whole line under the lock).
     val len0 = ioLock.synchronized(channel.size())
-    // fsync the tmp file BEFORE the rename and the directory AFTER it:
-    // without both, a power loss right after the atomic move can surface an
-    // empty/partial commits.jsonl, losing fsync-acknowledged commits.
     val tmpCh = java.nio.channels.FileChannel.open(
       tmp, StandardOpenOption.CREATE, StandardOpenOption.WRITE,
       StandardOpenOption.TRUNCATE_EXISTING)
@@ -336,7 +334,9 @@ final class ParquetLogBackend private (
       }
     }
     tmpOut.flush()
-    tmpCh.force(true)
+    // the filtered prefix reaches disk outside ioLock; the publish under
+    // the lock then forces only the suffix copied below
+    Publish.force(tmp)
     ioLock.synchronized {
       // Commits appended during the rewrite are all > segmentMaxVersion by
       // construction — copy them verbatim past the filtered prefix.
@@ -355,13 +355,12 @@ final class ParquetLogBackend private (
             pos += n
           }
         }
-      tmpCh.force(true)
       tmpCh.close()
       channel.close()
-      Files.move(tmp, commitLog,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      // directory fsync so the rename itself is durable
-      ParquetLogBackend.fsyncDir(dir)
+      // forced before the rename and the directory after it: without both,
+      // a power loss can surface an empty or partial commits.jsonl, losing
+      // fsync-acknowledged commits
+      Publish.replace(tmp, commitLog)
       channel = java.nio.channels.FileChannel.open(
         commitLog,
         StandardOpenOption.CREATE,
@@ -446,18 +445,15 @@ final class ParquetLogBackend private (
   private def recover(): Unit = {
     // roll back an interrupted coalesceSegments swap: segments.old holds
     // the complete pre-rewrite data; the staging dir is never trusted
-    val old = dir.resolve("segments.old")
-    if (Files.exists(old)) {
-      if (Files.exists(segmentsDir)) deleteRecursively(old) // swap completed
-      else Files.move(old, segmentsDir, StandardCopyOption.ATOMIC_MOVE)
-    }
-    deleteRecursively(dir.resolve("segments.rewrite"))
+    Publish.recover(segmentsDir)
+    if (!Files.exists(segmentsDir)) Publish.createDirectory(segmentsDir)
+    Publish.deleteRecursively(dir.resolve("segments.rewrite"))
     // scratch dirs from compactions that crashed between the segment write
     // and the atomic move: their batches are still wholly in the commit log
     // (rotation happens after the move), so the copies are pure leaks
     scala.util.Using.resource(
       Files.newDirectoryStream(dir, "segments.write-*"))(
-      _.iterator().asScala.toList.foreach(deleteRecursively))
+      _.iterator().asScala.toList.foreach(Publish.deleteRecursively))
     rebuildManifest()
     if (manifest.nonEmpty) {
       segmentMaxVersion = manifest.map(_._3).max
@@ -572,13 +568,6 @@ object ParquetLogBackend {
     (segs, tail.filter(_.version > watermark).toList)
   }
 
-  private[graft] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      scala.util.Using.resource(Files.walk(p))(
-        _.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f)))
-    }
-
   /** Create a new log directory (≙ file.Create, file.go:128-161). */
   def create(
       spark: SparkSession,
@@ -597,8 +586,7 @@ object ParquetLogBackend {
     metadata.foreach { case (k, v) => mm.put(k, v) }
     val tmp = dir.resolve("meta.json.tmp")
     Files.write(tmp, mapper.writeValueAsBytes(meta))
-    Files.move(tmp, dir.resolve("meta.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Publish.replace(tmp, dir.resolve("meta.json"))
     open(spark, path, compactThreshold, compactIntervalMs, maxSegmentFiles)
   }
 
@@ -908,7 +896,7 @@ object ParquetLogBackend {
   }
 
   /** Write `batch` as one segment file at `out` with parquet-hadoop, on
-    * the calling thread, and fsync it. The layout is the one
+    * the calling thread. The layout is the one
     * [[ParquetLogBackend#writeSegments]] gives a Spark write: zstd, and
     * Parquet pages of at most one read batch. */
   private def writeSegment(batch: Seq[StoredEvent], out: Path): Unit = {
@@ -931,16 +919,5 @@ object ParquetLogBackend {
       g.add("checksum", e.checksum)
       w.write(g)
     } finally w.close()
-    scala.util.Using.resource(java.nio.channels.FileChannel.open(
-      out, StandardOpenOption.WRITE))(_.force(true))
   }
-
-  /** fsync a directory, so the entries created or renamed in it are
-    * durable. Linux supports opening a directory for read+force; elsewhere
-    * it throws — degraded to best-effort rather than failing the caller. */
-  private def fsyncDir(d: Path): Unit =
-    try scala.util.Using.resource(
-      java.nio.channels.FileChannel.open(d, StandardOpenOption.READ))(
-      _.force(true))
-    catch { case _: java.io.IOException => () }
 }

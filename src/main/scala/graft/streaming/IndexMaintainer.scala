@@ -109,18 +109,9 @@ object IndexMaintainer {
             ()
           }
           Files.createDirectories(marker)
-          if (compactEvery > 0) {
-            val metaRoot = Paths.get(dir, "meta")
-            val committed =
-              if (!Files.isDirectory(metaRoot)) 0
-              else {
-                import scala.jdk.CollectionConverters._
-                scala.util.Using.resource(Files.list(metaRoot))(
-                  _.iterator().asScala.count(p => Files.isDirectory(p) &&
-                    !p.getFileName.toString.startsWith(".")))
-              }
-            if (committed >= compactEvery) SearchIndex.compact(spark, dir)
-          }
+          if (compactEvery > 0 &&
+              SearchIndex.committedBatches(dir).size >= compactEvery)
+            SearchIndex.compact(spark, dir)
         }
       }
       .start()

@@ -49,18 +49,8 @@ final class LiveSearchServer(
     (c, SearchIndex.load(spark, dir).snapshot(mode))
   }
 
-  private def committed(): Set[String] = {
-    val root = Paths.get(dir, "meta")
-    if (!Files.isDirectory(root)) Set.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(Files.list(root))(
-        _.iterator().asScala.toList)
-        .filter(p => Files.isDirectory(p) &&
-          !p.getFileName.toString.startsWith("."))
-        .map(_.getFileName.toString).toSet
-    }
-  }
+  private def committed(): Set[String] =
+    SearchIndex.committedBatches(dir).toSet
 
   /** Reload + re-snapshot if the committed-batch set changed since the
     * snapshot was taken. @return true if a refresh happened */

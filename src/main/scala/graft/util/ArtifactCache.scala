@@ -1,16 +1,23 @@
 package graft.util
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** The shared fingerprint-keyed artifact-cache discipline for query
   * entries that exercise a PERSISTED artifact (IVF/PQ indexes, dedup
   * state, the event-log mirror, the lexical search index): build once per
-  * source-data fingerprint into a staging dir, atomically rename into
-  * place, and serve every later run from the cached copy. Concurrent
-  * builders race benignly (the loser keeps the winner's copy); a crashed
-  * build leaves only an unreachable staging dir.
+  * source-data fingerprint and builder version into a staging dir, publish
+  * it with [[Publish.claim]], and serve every later run from the cached
+  * copy. Concurrent builders race benignly (the loser keeps the winner's
+  * copy); a crashed build leaves only an unreachable staging dir.
   */
 object ArtifactCache {
+
+  /** One kind of cached artifact: its directory-name `prefix`, the
+    * `readyMarker` entry that exists inside every complete copy, and the
+    * `version` of its builder. Bump `version` whenever the artifact's
+    * layout or fit changes: it is part of the cache key, so copies built
+    * by older code are rebuilt instead of served. */
+  final case class Kind(prefix: String, readyMarker: String, version: Int)
 
   /** Fingerprint of every regular file under `src` (a file or a
     * directory tree): relative NAME + size + mtime per file, md5'd. File
@@ -29,39 +36,32 @@ object ArtifactCache {
       s"${src.relativize(f)}:${Files.size(f)}:" +
         s"${Files.getLastModifiedTime(f).toMillis}"
     }.sorted
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    md5(entries.mkString("\n"))
   }
 
-  /** Return the cached artifact dir for (`src`, `prefix`), building it
-    * via `build(stagingPath)` on first use. `readyMarker` is a file or
-    * directory that exists inside every complete artifact — its presence
-    * is the serve-from-cache signal. */
-  def ensure(src: Path, prefix: String, readyMarker: String)(
-      build: String => Unit): String = synchronized {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$src|${fingerprintOf(src)}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val base = Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"$prefix-$key")
-    if (Files.exists(base.resolve(readyMarker))) return base.toString
-    val staging = Paths.get(
-      base.toString + ".build-" +
-        java.util.UUID.randomUUID().toString.take(8))
-    build(staging.toString)
-    try Files.move(staging, base, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      // FileSystemException covers every way a lost race can surface:
-      // FileAlreadyExists/DirectoryNotEmpty, but ALSO the generic form the
-      // JDK raises for ENOTEMPTY when renaming a directory onto an
-      // existing non-empty one on Linux — the common losing-builder path
-      case e: java.nio.file.FileSystemException =>
-        graft.storage.ParquetLogBackend.deleteRecursively(staging)
-        // a lost race must leave the winner's copy; a permission or I/O
-        // failure has no winner and must surface
-        if (!Files.exists(base.resolve(readyMarker))) throw e
+  private def md5(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+
+  /** Return the cached artifact dir of `kind` for `src`, building it via
+    * `build(stagingPath)` on first use. The ready marker's presence is the
+    * serve-from-cache signal; it can only sit on a complete copy, because
+    * the whole staging dir is published at once. */
+  def ensure(src: Path, kind: Kind)(build: String => Unit): String =
+    synchronized {
+      val key = md5(s"$src|v${kind.version}|${fingerprintOf(src)}").take(12)
+      val base = Paths.get(
+        sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"${kind.prefix}-$key")
+      if (Files.exists(base.resolve(kind.readyMarker))) return base.toString
+      val staging = Paths.get(
+        base.toString + ".build-" +
+          java.util.UUID.randomUUID().toString.take(8))
+      build(staging.toString)
+      if (!Publish.claim(staging, base) &&
+          !Files.exists(base.resolve(kind.readyMarker)))
+        throw new IllegalStateException(
+          s"$base exists without its ready marker ${kind.readyMarker}")
+      base.toString
     }
-    base.toString
-  }
 }

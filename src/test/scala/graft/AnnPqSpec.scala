@@ -338,7 +338,7 @@ class AnnPqSpec extends AnyFunSuite {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     assert(PqIndex.load(spark, dir).codes.count() === nBase + nRest,
       "a reader inside the torn window must see the old generation")
-    val post3 = PqIndex.rebuild(spark, dir) // recoverSwapRoot heals first
+    val post3 = PqIndex.rebuild(spark, dir) // recoverSwaps heals first
     assert(post3.verdict === "ok")
     assert(!new java.io.File(dir + ".old").exists(),
       "the maintenance entry must heal the torn root swap")

@@ -14,23 +14,38 @@ class AnnRecallSpec extends AnyFunSuite {
       .groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getLong(1)).toSet).toMap
 
-  test("ann_ivf_kmeans recall@5 vs brute force is >= 0.5 with 2/8 probes") {
-    val exact = topk("ann_cosine_topk")
-    val ivf = topk("ann_ivf_kmeans")
-    assert(ivf.keySet == exact.keySet)
+  private lazy val exact = topk("ann_cosine_topk")
+
+  /** Mean recall@5 of entry `name` against the brute-force scan. */
+  private def assertRecall(name: String): Unit = {
+    val got = topk(name)
+    assert(got.keySet == exact.keySet)
     val recalls = exact.map { case (q, truth) =>
-      ivf(q).intersect(truth).size.toDouble / truth.size
+      got(q).intersect(truth).size.toDouble / truth.size
     }
     val mean = recalls.sum / recalls.size
     // probing 2 of 8 cells scans ~25% of candidates; embeddings cluster by
     // label so recall should be well above that floor
-    assert(mean >= 0.5, s"mean recall $mean, per-query $recalls")
+    assert(mean >= 0.5, s"$name mean recall $mean, per-query $recalls")
+  }
+
+  test("ann_ivf_kmeans recall@5 vs brute force is >= 0.5 with 2/8 probes") {
+    assertRecall("ann_ivf_kmeans")
+  }
+
+  // the persisted-index entries: built once through ArtifactCache, then
+  // loaded and probed — a stale or mis-fit cached index shows up here
+  test("ann_ivf_persisted recall@5 vs brute force is >= 0.5") {
+    assertRecall("ann_ivf_persisted")
+  }
+
+  test("ann_opq recall@5 vs brute force is >= 0.5") {
+    assertRecall("ann_opq")
   }
 
   test("nProbe sweep: recall and candidate volume rise monotonically") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val exact = topk("ann_cosine_topk")
     val sweep = Seq(1, 2, 4).map { nProbe =>
       val cands = graft.queries.Similarity
         .ivfKmeansCandidates(spark, sfDir, nProbe).cache()

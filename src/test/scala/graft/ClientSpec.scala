@@ -117,4 +117,18 @@ class ClientSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(java.lang.Long.parseLong(watermark, 16) >= 9L)
     } finally handle.close()
   }
+
+  test("scanned payloads keep the bytes the log stores") {
+    // number spellings and escapes a parsed tree would rewrite
+    val bs = "\\"
+    val sent = s"""{"a":1.50,"b":1e2,"c":"caf${bs}u00e9 $bs/x","d":"é"}"""
+    val v = client.append(EventData("raw", sent)).version
+    val got = ArrayBuffer.empty[String]
+    client.scan(v, limit = 1)(e => got += e.payloadJson)
+    val stored = log.page(java.lang.Long.parseLong(v, 16), limit = Some(1))
+      .next().payloadJson
+    assert(stored == sent)
+    assert(got.map(_.getBytes("UTF-8").toSeq) ==
+      Seq(stored.getBytes("UTF-8").toSeq))
+  }
 }

@@ -226,7 +226,7 @@ class OpqModelSpec extends AnyFunSuite {
     assert(IvfIndex.driftVerdict(spark, dir2).verdict === "ok")
 
     // an index with no baseline says so rather than guessing
-    graft.storage.ParquetLogBackend.deleteRecursively(
+    graft.util.Publish.deleteRecursively(
       java.nio.file.Paths.get(dir2, "drift_baseline"))
     assert(IvfIndex.driftVerdict(spark, dir2).verdict === "no_baseline")
   }

@@ -182,7 +182,7 @@ class PackStateSpec extends AnyFunSuite {
     val dir = tmp()
     val h = PackState.pack(spark, dir, rows(0L -> Seq(1, 2, 3)), "d1", P)
     val bins = java.nio.file.Paths.get(dir, h.deltas.head.name, "bins")
-    graft.storage.ParquetLogBackend.deleteRecursively(bins)
+    graft.util.Publish.deleteRecursively(bins)
     // reading the snapshot (as the next pack's seed would) must throw —
     // an empty-seed fallback would reuse seq numbers and corrupt rows
     val e = intercept[Exception] {
@@ -190,7 +190,7 @@ class PackStateSpec extends AnyFunSuite {
     }
     assert(e.getMessage != null)
     // closed/ is required too: every pack writes it
-    graft.storage.ParquetLogBackend.deleteRecursively(
+    graft.util.Publish.deleteRecursively(
       java.nio.file.Paths.get(dir, h.deltas.head.name, "closed"))
     intercept[Exception] {
       PackState.binsClosed(spark, h).count()

@@ -142,7 +142,7 @@ class Round15PlanSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "emb")
 
     val bands = java.nio.file.Paths.get(dir, h.deltas.head.name, "bands")
-    graft.storage.ParquetLogBackend.deleteRecursively(bands)
+    graft.util.Publish.deleteRecursively(bands)
     val e = intercept[Exception] {
       DedupState.verdicts(spark, DedupState.load(dir), batch).collect()
     }

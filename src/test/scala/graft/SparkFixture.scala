@@ -12,6 +12,9 @@ object SparkFixture {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // plan assertions read scan locations, which Spark cuts at 100
+      // characters by default: keep them whole whatever the temp path
+      .config("spark.sql.maxMetadataStringLength", "1000")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
